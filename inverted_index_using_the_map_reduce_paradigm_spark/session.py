@@ -26,6 +26,8 @@ def cpu_count() -> int:
 # hundreds of times too fine.
 _BYTES_PER_INITIAL_PARTITION = 16 << 20
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _dir_bytes(path: str) -> int:
     """Total bytes under ``path`` — a stat walk, O(#files) driver-side
@@ -48,17 +50,19 @@ def _dir_bytes(path: str) -> int:
     seen_any = False
     for dirpath, _dirs, files in os.walk(path):
         for fn in files:
-            seen_any = True
             try:
                 total += os.stat(os.path.join(dirpath, fn)).st_size
             except OSError:
-                pass
+                continue
+            seen_any = True
     if not seen_any:
-        return -1  # empty/missing dir: unknown, NOT "zero bytes of data"
+        return -1  # nothing statable: unknown, NOT "zero bytes of data"
     return total
 
 
-def initial_partitions(cpus: int, data_bytes: int | None = None) -> int:
+def initial_partitions(
+    cpus: int, data_bytes: int | None = None, *, requested: int = 1
+) -> int:
     """Scale-ADAPTIVE initial shuffle-partition count (r13 optimization
     round, guide §2.2 + §1.2): the useful width of a shuffle tracks the
     DATA VOLUME, not a constant.  The previous fixed ``4 * cpus`` was
@@ -77,7 +81,11 @@ def initial_partitions(cpus: int, data_bytes: int | None = None) -> int:
     build their own larger corpora (scale_sweep) re-derive per
     multiplier via this function and set the runtime conf.  Override
     with ``SPARK_GRAFT_INITIAL_PARTITIONS`` when benching partitioning
-    itself.
+    itself: the explicit value is used exactly as given.  Only the
+    DERIVED value floors at ``requested``, the caller's explicit
+    shuffle width (with coalescing on, initialPartitionNum IS the
+    effective width, so a bound derived from a different directory
+    must not undercut it).
 
     r14 (VERDICT r13 items 1-2): the 32-core bench-scale derivation
     (= cores) was re-validated by an interleaved quiet-host A/B on the
@@ -133,13 +141,14 @@ def initial_partitions(cpus: int, data_bytes: int | None = None) -> int:
             f"initialPartitionNum falls back to 4*cpus = {4 * cpus}",
             file=sys.stderr,
         )
-        return 4 * cpus
+        return max(4 * cpus, requested)
     derived = int(data_bytes) // _BYTES_PER_INITIAL_PARTITION
     if derived <= cpus:
-        return cpus  # small input: the A/B-validated bench-scale value
+        # small input: the A/B-validated bench-scale value
+        return max(cpus, requested)
     # non-trivial input: never below the 4x-cores cliff band (see the
     # x256 measurements in the docstring)
-    return int(min(max(4 * cpus, derived), 32 * cpus))
+    return max(int(min(max(4 * cpus, derived), 32 * cpus)), requested)
 
 
 def get_spark(app_name: str = "repo_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
@@ -164,19 +173,22 @@ def get_spark(app_name: str = "repo_spark", *, shuffle_partitions: int | None = 
         # overhead that the constant was taxing).  On a real cluster
         # this is the same recommended AQE posture: a high,
         # DATA-DERIVED initial bound; runtime decides the final widths.
-        # Floored at the EXPLICITLY requested shuffle width (r14,
-        # ADVICE r13): with AQE coalescing on, initialPartitionNum
-        # replaces spark.sql.shuffle.partitions as the actual width, so
-        # a caller that asked for N partitions (the CLI's
-        # mappers/reducers contract over a manifest corpus unrelated to
-        # DEFAULT_SF_DIR) must never be silently undercut by a bound
-        # derived from a different directory.
+        # The derived bound floors at the requested shuffle width (the
+        # CLI's mappers/reducers contract); an explicit
+        # SPARK_GRAFT_INITIAL_PARTITIONS is used as given.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(max(initial_partitions(cpus), shuffle_partitions)),
+            str(initial_partitions(cpus, requested=shuffle_partitions)),
         )
         # ---- python <-> jvm data path ----------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers start through the engine's daemon, which stops
+        # every task from re-parsing Spark's unchanged zip and jar
+        # archives (see pydaemon.py).  The daemon and the UDFs import
+        # the package, so workers get its parent directory on their
+        # path whatever the caller's cwd or PYTHONPATH.
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # InferFiltersFromGenerate synthesizes a ``size(arr) > 0`` filter
         # under every non-outer explode and pushes it below exchanges.
         # When the array comes from a Python UDF that inferred filter

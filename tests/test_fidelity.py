@@ -117,6 +117,24 @@ def test_manifest_paths_with_uri_hostile_chars(spark, tmp_path):
     assert rows == {1, 2}
 
 
+def test_validate_raises_when_a_manifest_entry_is_lost(spark, tmp_path, monkeypatch):
+    """validate=True is loud: when a non-empty manifest entry does not
+    surface in the scan, read_corpus raises instead of returning a
+    corpus without that document.  Skipping the URL decode makes the
+    path with a space stop matching its percent-encoded scan URI."""
+    from inverted_index_using_the_map_reduce_paradigm_spark.sources import manifest as m
+
+    p1 = tmp_path / "with space.txt"
+    p1.write_text("alpha beta\n")
+    p2 = tmp_path / "plain.txt"
+    p2.write_text("gamma\n")
+    mf = tmp_path / "m.txt"
+    mf.write_text(f"2\n{p1}\n{p2}\n")
+    monkeypatch.setattr(m.F, "url_decode", lambda col: col)
+    with pytest.raises(RuntimeError, match="2 non-empty files listed but only 1"):
+        m.read_corpus(spark, str(mf), validate=True)
+
+
 def test_null_and_empty_text_rows(spark):
     """Null / empty / whitespace-only documents flow through the whole
     pipeline without rows leaking into the index (the reference's

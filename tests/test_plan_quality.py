@@ -1610,7 +1610,7 @@ def test_hamming_families_run_signature_kernel_zero_times_in_join(spark):
         assert audit.python_eval_count(plan) == 0, (name, plan[:1500])
 
 
-def test_initial_shuffle_partitions_derive_from_input_volume(spark, monkeypatch):
+def test_initial_shuffle_partitions_derive_from_input_volume(spark, monkeypatch, tmp_path):
     """r13 optimization-round pin (r14-hardened per ADVICE r13): the AQE
     initial shuffle-partition bound is DERIVED from input volume (one
     per 16 MiB), floored at the core count and capped at 32x cores —
@@ -1652,6 +1652,13 @@ def test_initial_shuffle_partitions_derive_from_input_volume(spark, monkeypatch)
     assert _dir_bytes("hdfs://namenode/warehouse/sf100") == -1
     assert _dir_bytes("s3a://bucket/corpus") == -1
     assert _dir_bytes("/nonexistent/dir/for/this/test") == -1
+    # files that all fail to stat carry no size signal either: unknown
+    dangling = tmp_path / "dangling"
+    dangling.mkdir()
+    (dangling / "gone.parquet").symlink_to(tmp_path / "missing.parquet")
+    assert _dir_bytes(str(dangling)) == -1
+    (dangling / "real.bin").write_bytes(b"x" * 10)
+    assert _dir_bytes(str(dangling)) == 10
     assert initial_partitions(32, -1) == 128
     assert initial_partitions(512, -1) == 2048
     # the override is validated, not passed through raw (ADVICE r13)
@@ -1676,17 +1683,45 @@ def test_initial_shuffle_partitions_derive_from_input_volume(spark, monkeypatch)
     assert got >= cpu_count()
 
 
-def test_initial_shuffle_partitions_floor_at_requested_width():
-    """ADVICE r13 (medium): an EXPLICIT shuffle_partitions request (the
-    CLI's mappers/reducers parallelism over a manifest corpus unrelated
-    to DEFAULT_SF_DIR) must floor the AQE initialPartitionNum — with
-    coalescing on, initialPartitionNum IS the effective width, so a
-    derived bound below the request would silently undercut it.  Pinned
-    against the builder-conf source, not a live session (a second
-    SparkSession per test run is not worth one conf read)."""
-    import inspect
+def test_initial_shuffle_partitions_floor_at_requested_width(spark, monkeypatch):
+    """With AQE coalescing on, initialPartitionNum IS the effective
+    shuffle width.  A DERIVED value floors at the width the caller asked
+    for (the CLI's mappers/reducers contract over a manifest corpus
+    unrelated to DEFAULT_SF_DIR); an explicit
+    SPARK_GRAFT_INITIAL_PARTITIONS is used exactly as given, even below
+    that width.  Checked through get_spark on the live session (its
+    runtime SQL confs are re-applied by getOrCreate), then restored."""
+    from inverted_index_using_the_map_reduce_paradigm_spark.session import (
+        cpu_count,
+        get_spark,
+        initial_partitions,
+    )
 
-    from inverted_index_using_the_map_reduce_paradigm_spark import session
+    monkeypatch.delenv("SPARK_GRAFT_INITIAL_PARTITIONS", raising=False)
+    # every derived branch floors at the request: small, unknown, capped
+    assert initial_partitions(4, 0, requested=64) == 64
+    assert initial_partitions(4, -1, requested=64) == 64
+    assert initial_partitions(4, 2**50, requested=256) == 256
+    # a request below the derivation leaves the derivation alone
+    assert initial_partitions(4, 0, requested=2) == 4
+    assert initial_partitions(4, -1, requested=2) == 16
+    monkeypatch.setenv("SPARK_GRAFT_INITIAL_PARTITIONS", "3")
+    assert initial_partitions(4, 0, requested=64) == 3
 
-    src = inspect.getsource(session.get_spark)
-    assert "max(initial_partitions(cpus), shuffle_partitions)" in src
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    wide = 64 * cpu_count() + 1  # above any derived value (cap: 32x)
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_INITIAL_PARTITIONS")
+        s = get_spark("floor_check", shuffle_partitions=wide)
+        assert s is spark
+        assert int(spark.conf.get(keys[1])) == wide
+        monkeypatch.setenv("SPARK_GRAFT_INITIAL_PARTITIONS", "3")
+        get_spark("override_check", shuffle_partitions=wide)
+        assert int(spark.conf.get(keys[1])) == 3
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
