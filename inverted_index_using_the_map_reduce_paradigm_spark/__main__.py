@@ -10,9 +10,9 @@ writes ``a.txt`` … ``z.txt`` into the working directory (main.c++:
 M and R become the Spark local-mode parallelism hint (max of the two —
 Spark schedules both "phases" over one executor pool; the mapper/
 reducer split is meaningless under a shuffle engine).  ``out_dir`` is
-required and is REPLACED on each run (the partitioned sink writes in
-overwrite mode — unlike the reference, which drops its files into the
-working directory).  The output is byte-compatible
+required and is REPLACED on each run (the letter-file sink clears it
+first — unlike the reference, which drops its files into the working
+directory).  The output is byte-compatible
 with the reference: 26 files, ``word:[d1 d2 … dn]`` lines, rows ordered
 (doc_freq DESC, word ASC), postings ascending, 1-based doc ids in
 manifest order.
@@ -141,7 +141,7 @@ def main(argv: list[str]) -> int:
     spark = get_spark("inverted_index_cli", shuffle_partitions=parallelism)
     # validate: every manifest entry must surface in the scan (loud
     # failure beats silently dropping a document on a path-encoding
-    # mismatch; the extra scan is acceptable in the CLI entry point)
+    # mismatch; checked against the scan's file listing, no data read)
     docs = read_corpus(spark, manifest, validate=True, wholetext=True)
     # bulk build: the Arrow bytes.translate tokenizer (byte-identical
     # output, verified by the race harness and fidelity suite)

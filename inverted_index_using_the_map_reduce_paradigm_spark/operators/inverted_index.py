@@ -14,8 +14,8 @@ partitions.
 Scale posture: the only required shuffle is the ``groupBy("word")``
 partial+final aggregation (map-side combine replaces the reference's
 manual per-file dedup).  Posting lists never touch the driver; the
-letter-partitioned sink (``sources/sinks.py``) writes directly from
-executors.
+letter-file sink (``sources/sinks.py``) writes each letter's file from
+the task that holds it.
 """
 
 from __future__ import annotations
@@ -96,7 +96,7 @@ def formatted_index(
     documents: DataFrame, arrow_tokenizer: bool = False
 ) -> DataFrame:
     """Adds the reference's output line format ``word:[d1 d2 ... dn]``
-    (main.c++:254-266); input to the partitioned text sink."""
+    (main.c++:254-266); input to the letter-file sink."""
     return build_index(documents, arrow_tokenizer=arrow_tokenizer).withColumn(
         "line",
         F.concat(

@@ -126,8 +126,7 @@ def write_table(
     """Write ``df`` as ``fmt``, optionally hive-partitioned.
 
     Text sink quirk: Spark's text writer takes exactly one string
-    column (plus partition columns) — the caller formats the line, as
-    ``sinks.write_letter_index`` does.
+    column (plus partition columns) — the caller formats the line.
     """
     if fmt not in FORMATS:
         raise ValueError(f"unsupported format {fmt!r}; one of {FORMATS}")

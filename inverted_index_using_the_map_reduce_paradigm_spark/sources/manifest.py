@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -94,20 +95,31 @@ def read_corpus(
     documented price of a skewed layout.
 
     ``input_file_name()`` returns a percent-encoded file URI, so it is
-    URL-decoded before joining against the driver-side absolute paths —
-    otherwise a manifest path containing a space (or any URI-escaped
-    char) would silently drop every line of that document.  A literal
-    ``+`` is legal in a URI path but ``url_decode`` (URLDecoder
-    semantics) would turn it into a space, so it is re-escaped first.
+    decoded (``_decoded_path``) before joining against the driver-side
+    absolute paths — otherwise a manifest path containing a space (or
+    any URI-escaped char) would silently drop every line of that
+    document.
 
-    ``validate=True`` adds a loud count check (every manifest entry must
-    surface in the scan) — an extra scan of the corpus, so it is opt-in;
-    the CLI and tests enable it.
+    ``validate=True`` adds a loud check that every non-empty manifest
+    entry can surface in the scan.  It reads no data: the scans' own
+    file listing (``DataFrame.inputFiles()``, the same strings
+    ``input_file_name()`` yields) goes through the same decode on the
+    driver, and every listed non-empty file yields at least one row.
+    Spark's listing skips names starting with ``_`` or ``.``, so such
+    manifest entries fail the check.  The CLI and tests enable it.
     """
     paths = read_manifest_paths(manifest_path)
+    # pandas + Arrow makes the map a LocalRelation, broadcast by a
+    # JVM-only job; a list of tuples would be a Python RDD whose
+    # broadcast runs a Python stage under a second worker factory
     mapping = spark.createDataFrame(
-        [(os.path.abspath(p), i + 1) for i, p in enumerate(paths)],
-        ["abs_path", "doc_id"],
+        pd.DataFrame(
+            {
+                "abs_path": [os.path.abspath(p) for p in paths],
+                "doc_id": range(1, len(paths) + 1),
+            }
+        ),
+        "abs_path string, doc_id long",
     )
     # Passing N explicit paths makes the DataSource glob-qualify each
     # one driver-side — measured ~10 s for 5000 paths vs ~0.1 s to list
@@ -119,8 +131,6 @@ def read_corpus(
     # list.  Extra non-manifest files in a shared directory cost scan
     # bytes only — their rows drop at the join, and ``validate`` checks
     # every manifest entry surfaced.
-    uri_path = F.regexp_replace(F.input_file_name(), "^file:/*", "/")
-
     def _scan(read_paths: list[str], per_file: bool) -> DataFrame:
         # lineSep pins the row delimiter to \n exactly like the
         # reference's getline (main.c++:98).  Without it Hadoop's
@@ -132,9 +142,7 @@ def read_corpus(
         return spark.read.option("lineSep", "\n").text(
             read_paths, wholetext=per_file
         ).select(
-            F.url_decode(
-                F.replace(uri_path, F.lit("+"), F.lit("%2B"))
-            ).alias("abs_path"),
+            _decoded_path(F.input_file_name()).alias("abs_path"),
             F.col("value").alias("text"),
         )
 
@@ -207,14 +215,43 @@ def read_corpus(
         lines = _scan(read_paths, per_file=bool(wholetext))
     corpus = lines.join(F.broadcast(mapping), "abs_path").select("doc_id", "text")
     if validate:
-        # empty (0-byte) corpus files legitimately yield no rows in
-        # EITHER mode (wholetext included — verified by the adversarial
-        # fidelity test) — exclude them
-        expected = sum(1 for p in paths if os.path.getsize(p) > 0)
-        seen = corpus.select("doc_id").distinct().count()
-        if seen != expected:
-            raise RuntimeError(
-                f"manifest {manifest_path}: {expected} non-empty files listed "
-                f"but only {seen} matched the scan — path encoding mismatch?"
-            )
+        _check_listed(spark, manifest_path, paths, corpus.inputFiles())
     return corpus
+
+
+def _decoded_path(uri: Column) -> Column:
+    """A scan's file URI as the absolute path the manifest names.  A
+    literal ``+`` is legal in a URI path but ``url_decode``
+    (URLDecoder semantics) would turn it into a space, so it is
+    re-escaped first."""
+    path = F.regexp_replace(uri, "^file:/*", "/")
+    return F.url_decode(F.replace(path, F.lit("+"), F.lit("%2B")))
+
+
+def _check_listed(
+    spark: SparkSession, manifest_path: str, paths: list[str], listed: list[str]
+) -> None:
+    """Raise unless every non-empty manifest file is among ``listed``
+    (the scans' file URIs) after the join's own decode.  Empty (0-byte)
+    files legitimately yield no rows in either scan mode, so they are
+    not required."""
+    decoded = {
+        r.p
+        for r in spark.createDataFrame(pd.DataFrame({"uri": listed}), "uri string")
+        .select(_decoded_path(F.col("uri")).alias("p"))
+        .collect()
+    }
+    expected = [os.path.abspath(p) for p in paths if os.path.getsize(p) > 0]
+    missing = [p for p in expected if p not in decoded]
+    if missing:
+        msg = (
+            f"manifest {manifest_path}: {len(expected)} non-empty files listed "
+            f"but only {len(expected) - len(missing)} matched the scan — path "
+            f"encoding mismatch? missing: {missing[:5]}"
+        )
+        if any(os.path.basename(p).startswith(("_", ".")) for p in missing):
+            msg += (
+                "; Spark's file listing skips names starting with '_' or "
+                "'.', even when the path is given explicitly"
+            )
+        raise RuntimeError(msg)

@@ -6,18 +6,24 @@ word (main.c++:254-266), rows ordered (doc_freq DESC, word ASC) within
 each file (main.c++:37-44,236) and postings ascending (main.c++:239-252).
 
 Spark-side everything stays distributed: one exchange partitions by
-letter, a within-partition sort fixes the row order, and the
-partitioned text sink writes from executors.  The only driver-side step
-is ``collect_reference_layout`` — pure FILE RENAMES (no data movement)
-to flatten ``letter=x/part-*.txt`` into the reference's ``x.txt`` names.
+letter, a within-partition sort fixes the row order, and a narrow
+``mapInArrow`` writes each letter's run straight to ``<letter>.txt``
+from the task that holds it (temp file + atomic rename).  The driver
+only clears ``out_dir`` before the write, checks that no letter came
+from two tasks, and creates the empty files of absent letters.  Tasks
+write with plain POSIX file calls, so ``out_dir`` is a local path (or a
+filesystem every executor mounts at the same path), like the
+reference's working directory.
 """
 
 from __future__ import annotations
 
 import glob
+import itertools
 import os
 import shutil
 import string
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,19 +33,17 @@ def write_letter_index(formatted: DataFrame, out_dir: str) -> None:
     """``formatted`` is operators.inverted_index.formatted_index output
     (word, postings, doc_freq, letter, line).
 
-    repartition by letter (26 tiny partitions at any scale — the letter
-    dirs are the unit of output, and per-letter files must be ordered,
+    repartition by letter (26 tiny partitions at any scale — a letter
+    file is the unit of output, and per-letter files must be ordered,
     so this exchange is semantically required, same as the reference's
     bucket mutex stage); sortWithinPartitions puts every letter's rows
     in reference order inside its single task run.
     """
-    (
-        formatted.repartition("letter")
-        .sortWithinPartitions("letter", F.desc("doc_freq"), F.asc("word"))
-        .select("line", "letter")
-        .write.mode("overwrite")
-        .partitionBy("letter")
-        .text(out_dir)
+    write_letter_files(
+        formatted.repartition("letter").sortWithinPartitions(
+            "letter", F.desc("doc_freq"), F.asc("word")
+        ),
+        out_dir,
     )
 
 
@@ -59,8 +63,8 @@ def write_letter_index_segmented(segmented: DataFrame, out_dir: str) -> None:
     one hash-agg entry per word, so a word posted in every document of
     a 100 TB corpus streams through; the final line string itself is
     the only unavoidable allocation (it IS the output format).
-    Ordering survives because mapInPandas is narrow (no exchange
-    between the sort and the writer).
+    Ordering survives because mapInPandas and the letter-file writer
+    are narrow (no exchange between the sort and the files).
     """
     import pandas as pd
 
@@ -90,19 +94,100 @@ def write_letter_index_segmented(segmented: DataFrame, out_dir: str) -> None:
                     cur = (letter, word)
                 parts.append(postings)
             if lines:  # emit completed lines; keep the open word buffered
-                yield pd.DataFrame({"line": lines, "letter": letters})
+                yield pd.DataFrame({"letter": letters, "line": lines})
                 lines, letters = [], []
 
         flush_word()
         if lines:
-            yield pd.DataFrame({"line": lines, "letter": letters})
+            yield pd.DataFrame({"letter": letters, "line": lines})
 
-    (
-        ordered.mapInPandas(concat_stream, schema="line string, letter string")
-        .write.mode("overwrite")
-        .partitionBy("letter")
-        .text(out_dir)
+    write_letter_files(
+        ordered.mapInPandas(concat_stream, schema="letter string, line string"),
+        out_dir,
     )
+
+
+def write_letter_files(ordered: DataFrame, out_dir: str) -> None:
+    """Write (letter, line) rows as the reference's 26 letter files.
+
+    ``ordered`` must hold each letter in ONE partition, its rows
+    contiguous and in file order (``repartition("letter")`` +
+    ``sortWithinPartitions``).  Each task writes every letter run it
+    holds to ``.<letter>.txt.<task attempt>.tmp`` and renames it to
+    ``<letter>.txt``, so a retried attempt never interleaves with a
+    failed one, and reports one (letter, lines) row per file.  A letter
+    reported by two tasks means the partitioning contract broke: the
+    two files replaced each other, so the write raises instead of
+    keeping either.  ``out_dir`` is replaced, as an overwrite sink
+    would.
+    """
+    import pyarrow as pa
+
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    schema = pa.schema([("letter", pa.string()), ("lines", pa.int64())])
+
+    def write_runs(batches):
+        from pyspark import TaskContext
+
+        attempt = TaskContext.get().taskAttemptId()
+        done_letters: list[str] = []
+        done_lines: list[int] = []
+        cur, out, n = None, None, 0
+
+        def finish():
+            out.close()
+            os.replace(out.name, os.path.join(out_dir, f"{cur}.txt"))
+            done_letters.append(cur)
+            done_lines.append(n)
+
+        try:
+            for batch in batches:
+                letters = batch.column("letter").to_pylist()
+                lines = batch.column("line").to_pylist()
+                start = 0
+                for letter, run in itertools.groupby(letters):
+                    stop = start + sum(1 for _ in run)
+                    if letter != cur:
+                        if out is not None:
+                            finish()
+                        cur, n = letter, 0
+                        out = open(
+                            os.path.join(out_dir, f".{cur}.txt.{attempt}.tmp"),
+                            "w",
+                            encoding="utf-8",
+                            newline="",
+                        )
+                    out.write("\n".join(lines[start:stop]) + "\n")
+                    n += stop - start
+                    start = stop
+            if out is not None:
+                finish()
+        finally:
+            if out is not None:
+                out.close()
+        yield pa.RecordBatch.from_pydict(
+            {"letter": done_letters, "lines": done_lines}, schema=schema
+        )
+
+    try:
+        reported = Counter(
+            r.letter
+            for r in ordered.select("letter", "line")
+            .mapInArrow(write_runs, "letter string, lines long")
+            .collect()
+        )
+    finally:
+        for tmp in glob.glob(os.path.join(out_dir, ".*.tmp")):
+            os.remove(tmp)
+    split = sorted(letter for letter, tasks in reported.items() if tasks > 1)
+    if split:
+        raise ValueError(
+            f"letters {split} were written by more than one task; the "
+            "reference layout requires one task per letter (write the "
+            "sink with repartition('letter')) so file order is row order"
+        )
+    collect_reference_layout(out_dir)
 
 
 def write_parquet_index(index: DataFrame, out_dir: str) -> None:
@@ -184,31 +269,12 @@ def write_range_layout(
 
 
 def collect_reference_layout(out_dir: str) -> None:
-    """Flatten the partitioned sink into the reference's exact layout:
-    ``<letter>.txt`` for every letter a-z (empty file when absent).
-
-    Ordering contract: the per-file row order (doc_freq DESC, word ASC,
-    main.c++:37-44) is established by ``sortWithinPartitions`` inside
-    ONE task per letter — both sinks above ``repartition("letter")``, so
-    every ``letter=x`` directory holds at most one part file and no
-    cross-file ordering question exists.  A future sink that split a
-    letter across tasks would have no such guarantee (part-file name
-    order is task order, not sort order), so this flattener refuses
-    multi-part letters instead of silently concatenating them."""
+    """Complete the reference's exact layout in ``out_dir``: a
+    ``<letter>.txt`` for every letter a-z.  The letter-file writer
+    already wrote every letter that has words; an absent letter gets an
+    empty file, and a file that exists is left intact.  Idempotent."""
     for letter in string.ascii_lowercase:
-        target = os.path.join(out_dir, f"{letter}.txt")
-        parts = sorted(glob.glob(os.path.join(out_dir, f"letter={letter}", "part-*")))
-        if len(parts) > 1:
-            raise ValueError(
-                f"letter={letter} produced {len(parts)} part files; the "
-                "reference layout requires one task per letter (write the "
-                "sink with repartition('letter')) so file order is row order"
-            )
-        with open(target, "wb") as out:
-            for p in parts:
-                with open(p, "rb") as f:
-                    shutil.copyfileobj(f, out)
-        shutil.rmtree(os.path.join(out_dir, f"letter={letter}"), ignore_errors=True)
+        open(os.path.join(out_dir, f"{letter}.txt"), "ab").close()
 
 
 ZORDER_BITS = 8  # quantization per dimension: 256 cells — plenty for

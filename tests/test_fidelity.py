@@ -51,12 +51,14 @@ def test_reference_output_layout(spark, tmp_path):
     out = str(tmp_path / "out")
     docs = read_corpus(spark, manifest)
     write_letter_index(formatted_index(docs), out)
+    # the sink alone leaves exactly the 26 letter files: no _SUCCESS,
+    # .crc, temp files or letter= directories; collecting the layout
+    # again keeps every byte
+    letters = [f"{c}.txt" for c in string.ascii_lowercase]
+    assert sorted(os.listdir(out)) == letters
+    written = {f: (tmp_path / "out" / f).read_bytes() for f in letters}
     collect_reference_layout(out)
-
-    files = sorted(os.listdir(out))
-    assert [f for f in files if not f.startswith(("_", "."))] == [
-        f"{c}.txt" for c in string.ascii_lowercase
-    ]
+    assert {f: (tmp_path / "out" / f).read_bytes() for f in letters} == written
 
     # semantics: 'the' appears in docs 1 and 2.  'quick-quick' is ONE
     # whitespace token that normalizes to 'quickquick' (main.c++:110-124
@@ -115,6 +117,54 @@ def test_manifest_paths_with_uri_hostile_chars(spark, tmp_path):
     docs = read_corpus(spark, str(manifest), validate=True)
     rows = {r.doc_id for r in docs.select("doc_id").distinct().collect()}
     assert rows == {1, 2}
+
+
+def test_input_files_match_input_file_name(spark, tmp_path):
+    """validate=True checks the manifest against DataFrame.inputFiles()
+    instead of scanning the data; that is only sound because the
+    listing yields exactly the strings input_file_name() yields, here
+    for a space, '%', '+' and a non-ASCII name."""
+    from pyspark.sql import functions as F
+
+    d = tmp_path / "odd dir %20 + stuff"
+    d.mkdir()
+    paths = []
+    for name in ("with space.txt", "pct%sign+plus.txt", "é acute.txt"):
+        (d / name).write_text("alpha\n")
+        paths.append(str(d / name))
+    df = spark.read.text(paths)
+    seen = {r.f for r in df.select(F.input_file_name().alias("f")).distinct().collect()}
+    assert sorted(df.inputFiles()) == sorted(seen)
+    assert len(seen) == 3
+
+
+def test_validate_names_files_the_spark_listing_skips(spark, tmp_path):
+    """Spark's file listing drops names starting with '_' or '.' even
+    when given explicitly; validate=True must say so and name them
+    instead of blaming the path encoding alone."""
+    d = tmp_path / "c"
+    d.mkdir()
+    names = [f"doc{i}.txt" for i in range(10)] + ["_hidden.txt", ".dot.txt"]
+    for name in names:
+        (d / name).write_text("alpha\n")
+    mf = tmp_path / "m.txt"
+    mf.write_text(f"{len(names)}\n" + "\n".join(str(d / n) for n in names) + "\n")
+    assert read_corpus(spark, str(mf)).select("doc_id").distinct().count() == 10
+    with pytest.raises(RuntimeError) as err:
+        read_corpus(spark, str(mf), validate=True)
+    msg = str(err.value)
+    assert "12 non-empty files listed but only 10 matched the scan" in msg
+    assert "_hidden.txt" in msg and ".dot.txt" in msg
+    assert "skips names starting with '_' or '.'" in msg
+
+
+def test_read_corpus_doc_id_map_is_a_local_relation(spark, tmp_path):
+    """The doc-id map is a LocalRelation, so its broadcast runs no
+    Python stage (a LogicalRDD built from a Python list ran one, under
+    a second Python worker factory)."""
+    docs = read_corpus(spark, make_corpus(tmp_path), wholetext=True)
+    plan = docs._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
 
 
 def test_validate_raises_when_a_manifest_entry_is_lost(spark, tmp_path, monkeypatch):
@@ -246,10 +296,8 @@ def test_segmented_sink_multi_segment_head_words(spark, tmp_path):
     segment_docs=2, a word posted in 7 docs produces 4 segments whose
     streaming concatenation (sinks.py concat_stream) must reassemble
     the exact flat line — including a word whose segments straddle
-    mapInPandas batch boundaries.  Also pins the one-letter-one-part
-    invariant collect_reference_layout's glob-sort relies on."""
-    import glob as globmod
-
+    mapInPandas batch boundaries.  Both sinks leave exactly the 26
+    letter files."""
     from inverted_index_using_the_map_reduce_paradigm_spark.operators.inverted_index import (
         build_segmented_index,
     )
@@ -282,16 +330,10 @@ def test_segmented_sink_multi_segment_head_words(spark, tmp_path):
     seg_out = str(tmp_path / "seg")
     write_letter_index_segmented(seg, seg_out)
 
-    # invariant behind collect_reference_layout's glob sort: the sink
-    # writes each letter as exactly ONE part file (one partition per
-    # letter), so byte order can't depend on part-file name order
-    for out in (flat_out, seg_out):
-        for d in globmod.glob(os.path.join(out, "letter=*")):
-            parts = [p for p in os.listdir(d) if p.startswith("part-")]
-            assert len(parts) == 1, (d, parts)
-
     collect_reference_layout(flat_out)
     collect_reference_layout(seg_out)
+    for out in (flat_out, seg_out):
+        assert sorted(os.listdir(out)) == [f"{c}.txt" for c in string.ascii_lowercase]
     z = (tmp_path / "flat" / "z.txt").read_text().splitlines()
     assert z[0] == "zebra:[1 2 3 4 5 6 7 8 9]"
     assert z[1] == "zoo:[5 6 7 8 9]"
@@ -328,25 +370,50 @@ def test_dir_listing_fast_path_excludes_non_manifest_files(spark, tmp_path):
     assert first == ["worda common"]
 
 
-def test_reference_layout_refuses_multi_part_letters(tmp_path):
-    """collect_reference_layout concatenates part files in NAME order,
-    which equals row order only because each letter is written by one
-    task (repartition('letter')).  The flattener must refuse a letter
-    directory holding several part files rather than silently gluing
-    them in an order nobody guaranteed (VERDICT r3 item 8)."""
-    import pytest
+def test_letter_reported_by_two_tasks_raises(spark, tmp_path):
+    """Each letter file is written by the one task holding that letter
+    (repartition('letter')).  Rows of one letter split over two tasks
+    would make the two files replace each other, so the writer must
+    raise instead of keeping either."""
+    from pyspark.sql import functions as F
 
+    from inverted_index_using_the_map_reduce_paradigm_spark.sources.sinks import (
+        write_letter_files,
+    )
+
+    rows = spark.range(0, 2, 1, numPartitions=2).select(
+        F.lit("a").alias("letter"),
+        F.concat(F.lit("a"), F.col("id").cast("string"), F.lit(":[1]")).alias("line"),
+    )
     out = tmp_path / "out"
-    good = out / "letter=a"
-    good.mkdir(parents=True)
-    (good / "part-00000").write_text("alpha:[1]\n")
-    bad = out / "letter=b"
-    bad.mkdir()
-    (bad / "part-00000").write_text("beta:[2]\n")
-    (bad / "part-00001").write_text("bat:[1 2]\n")
+    with pytest.raises(ValueError, match=r"letters \['a'\] were written by more than one task"):
+        write_letter_files(rows, str(out))
+    assert not [f for f in os.listdir(out) if f.endswith(".tmp")]
 
-    with pytest.raises(ValueError, match="letter=b produced 2 part files"):
-        collect_reference_layout(str(out))
+
+def test_rebuild_into_same_out_dir_leaves_no_stale_letter(spark, tmp_path):
+    """A second build into the same out_dir from a different corpus
+    leaves exactly the second corpus's bytes: no letter file of the
+    first corpus survives."""
+    first = read_corpus(spark, make_corpus(tmp_path))  # has z, x empty
+    d = tmp_path / "second"
+    d.mkdir()
+    (d / "g.txt").write_text("xylophone beta\nbeta\n")
+    mf = tmp_path / "m2.txt"
+    mf.write_text(f"1\n{d / 'g.txt'}\n")
+    second = read_corpus(spark, str(mf))
+
+    out = str(tmp_path / "out")
+    write_letter_index(formatted_index(first), out)
+    collect_reference_layout(out)
+    assert (tmp_path / "out" / "z.txt").read_text() == "zebra:[2]\n"
+    write_letter_index(formatted_index(second), out)
+    collect_reference_layout(out)
+
+    want = {"b": b"beta:[1]\n", "x": b"xylophone:[1]\n"}
+    assert sorted(os.listdir(out)) == [f"{c}.txt" for c in string.ascii_lowercase]
+    for c in string.ascii_lowercase:
+        assert (tmp_path / "out" / f"{c}.txt").read_bytes() == want.get(c, b""), c
 
 
 def test_cli_explain_surface(spark, capsys):
