@@ -411,23 +411,27 @@ def _buckets_of(e: str) -> F.Column:
     """Array of (table, bucket) structs from L tables of RP_BITS sign-bit
     hyperplanes (deterministic literals compiled into the plan -- no
     driver state at runtime).  Multi-table is the standard LSH recall
-    knob: candidate probability 1-(1-p^bits)^tables."""
+    knob: candidate probability 1-(1-p^bits)^tables.
+
+    Built as one SQL expression, parsed once: a ``repr`` + ``D`` literal
+    is the same double as the plane weight, and each projection sums
+    left to right from 0.0."""
+
+    def proj(plane: list[float]) -> str:
+        weights = ", ".join(f"{v!r}D" for v in plane)
+        return (
+            f"aggregate(zip_with(`{e}`, array({weights}), (x, y) -> x * y),"
+            " 0.0D, (acc, x) -> acc + x)"
+        )
+
     tables = []
     for t, planes in enumerate(RP_PLANES):
-        bucket = F.lit(0)
-        for i, plane in enumerate(planes):
-            proj = F.aggregate(
-                F.zip_with(
-                    F.col(e),
-                    F.array(*[F.lit(v) for v in plane]),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        tables.append(F.struct(F.lit(t).alias("t"), bucket.alias("b")))
-    return F.array(*tables)
+        bits = " + ".join(
+            f"CASE WHEN {proj(plane)} > 0 THEN {1 << i} ELSE 0 END"
+            for i, plane in enumerate(planes)
+        )
+        tables.append(f"named_struct('t', {t}, 'b', 0 + {bits})")
+    return F.expr(f"array({', '.join(tables)})")
 
 
 @register(
@@ -447,10 +451,10 @@ def q_similarity_search_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the plan is a plain equi-join that scales horizontally, and the
     candidate union across tables is a ``distinct`` before scoring.
 
-    Multiprobe (r12, VERDICT r11 #4): each query also probes the
-    RP_BITS buckets at Hamming distance 1 from its own bucket in every
-    table — the standard recall lift for sign-bit LSH (a near neighbor
-    that lands one flipped hyperplane away is the dominant miss mode).
+    Multiprobe: each query also probes the RP_BITS buckets at Hamming
+    distance 1 from its own bucket in every table — the standard recall
+    lift for sign-bit LSH (a near neighbor that lands one flipped
+    hyperplane away is the dominant miss mode).
     The probe fan-out lives entirely on the BROADCAST query side
     (N_QUERIES x L x (1+RP_BITS) rows); the corpus side still stores
     one bucket per table per vector, so the join stays the same

@@ -28,6 +28,8 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..data import read_parquet
+
 
 def write_letter_index(formatted: DataFrame, out_dir: str) -> None:
     """``formatted`` is operators.inverted_index.formatted_index output
@@ -212,8 +214,10 @@ def lookup_term(spark, index_dir: str, term: str) -> DataFrame:
     """Posting-list lookup against the stored index.  The redundant
     letter predicate makes partition pruning explicit in the plan
     (PartitionFilters: letter = substr(term,1,1)); the word predicate
-    pushes into the parquet scan of that one directory."""
-    idx = spark.read.parquet(index_dir)
+    pushes into the parquet scan of that one directory.  The index is
+    resolved once per session (``data.read_parquet``), so a repeated
+    lookup plans without a Spark job."""
+    idx = read_parquet(spark, index_dir)
     return idx.filter(
         (F.col("letter") == term[:1]) & (F.col("word") == term)
     )
@@ -384,7 +388,7 @@ def bloom_candidate_files(spark, sidecar_dir: str, term: str) -> list[str]:
     construction (build and probe share ``bloom_positions``); false
     positives only cost a wasted file read.  The collect is
     sidecar-sized (one row per candidate FILE, not per row)."""
-    side = spark.read.parquet(sidecar_dir)
+    side = read_parquet(spark, sidecar_dir)
     cond = F.lit(True)
     for p in bloom_positions(F.lit(term)):
         cond = cond & F.array_contains("bits", p)
@@ -406,7 +410,7 @@ def bloom_pruned_lookup(spark, index_dir: str, sidecar_dir: str,
         if f"/letter={term[:1]}/" in f
     ]
     if not files:
-        schema = spark.read.parquet(index_dir).schema
+        schema = read_parquet(spark, index_dir).schema
         return spark.createDataFrame([], schema).filter(F.col("word") == term)
     return (
         spark.read.option("basePath", index_dir)

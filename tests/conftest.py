@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -22,6 +23,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` calls ``fn()`` under its own job group and
+    returns ``(result, number of Spark jobs the call started)``, read
+    from the status tracker once the listener bus has drained."""
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def run(fn):
+        group = f"count_jobs-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 def pytest_configure(config):

@@ -95,6 +95,37 @@ def test_near_dup_rp_candidate_volume_subquadratic(spark):
     assert sizes < 0.6 * all_pairs, (sizes, all_pairs)
 
 
+def test_rp_buckets_match_a_pure_python_reference(spark):
+    """``_buckets_of`` gives every fixture embedding the (table, bucket)
+    pairs of a pure-Python sign-bit hash that sums each projection left
+    to right from 0.0, as the SQL ``aggregate`` does."""
+    from inverted_index_using_the_map_reduce_paradigm_spark.data import table
+    from inverted_index_using_the_map_reduce_paradigm_spark.operators.similarity import (
+        RP_PLANES,
+        _buckets_of,
+        _emb_double,
+    )
+
+    rows = (
+        table(spark, SF, "embeddings")
+        .select(_emb_double("embedding").alias("e"))
+        .select("e", _buckets_of("e").alias("tb"))
+        .collect()
+    )
+    assert rows
+    for r in rows:
+        want = []
+        for t, planes in enumerate(RP_PLANES):
+            b = 0
+            for i, plane in enumerate(planes):
+                acc = 0.0
+                for x, w in zip(r.e, plane):
+                    acc += x * w
+                b += (1 << i) if acc > 0 else 0
+            want.append((t, b))
+        assert [(s.t, s.b) for s in r.tb] == want
+
+
 def test_dynamic_block_count_scales_with_rows(spark):
     from inverted_index_using_the_map_reduce_paradigm_spark.operators.similarity import (
         NEAR_DUP_MIN_BLOCKS,
