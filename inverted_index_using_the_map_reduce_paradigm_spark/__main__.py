@@ -139,9 +139,10 @@ def main(argv: list[str]) -> int:
 
     parallelism = max(mappers, reducers, 1)
     spark = get_spark("inverted_index_cli", shuffle_partitions=parallelism)
-    # validate: every manifest entry must surface in the scan (loud
-    # failure beats silently dropping a document on a path-encoding
-    # mismatch; checked against the scan's file listing, no data read)
+    # whole-file rows: tasks open the local manifest files themselves
+    # (remote schemes and files over WHOLETEXT_MAX_BYTES go through
+    # Spark's text scan); validate fails loud, naming missing paths,
+    # instead of silently dropping a document
     docs = read_corpus(spark, manifest, validate=True, wholetext=True)
     # bulk build: the Arrow bytes.translate tokenizer (byte-identical
     # output, verified by the race harness and fidelity suite)

@@ -399,7 +399,8 @@ def bloom_pruned_lookup(spark, index_dir: str, sidecar_dir: str,
                         term: str) -> DataFrame:
     """Term lookup reading ONLY the bloom-candidate files.  basePath
     keeps the letter partition column alive on the direct file read;
-    the word predicate still pushes into each candidate's scan."""
+    the word predicate still pushes into each candidate's scan.  The
+    only Spark job at build is the sidecar collect."""
     # partition pruning composes with bloom skipping: the letter
     # predicate is applied to the candidate PATHS (what Catalyst's
     # PartitionFilters would do), so a bloom false positive in another
@@ -409,11 +410,14 @@ def bloom_pruned_lookup(spark, index_dir: str, sidecar_dir: str,
         for f in bloom_candidate_files(spark, sidecar_dir, term)
         if f"/letter={term[:1]}/" in f
     ]
+    # the stored index's schema (resolved once per session) spares the
+    # candidate read its schema-inference job
+    schema = read_parquet(spark, index_dir).schema
     if not files:
-        schema = read_parquet(spark, index_dir).schema
         return spark.createDataFrame([], schema).filter(F.col("word") == term)
     return (
         spark.read.option("basePath", index_dir)
+        .schema(schema)
         .parquet(*files)
         .filter(F.col("word") == term)
     )

@@ -4,19 +4,19 @@
 `.warc.gz` files (the Common Crawl layout: one gzip member per WARC
 record, concatenated) as a DataFrame.
 
-Split model (r14, VERDICT r13 item 5 — the Avro byte-range pattern):
+Split model (the Avro byte-range pattern):
 one InputPartition per archive file, PLUS byte-range splits inside
 files larger than the split size, exactly Spark's own FilePartition
 sizing rule — ``maxSplitBytes = min(maxPartitionBytes,
 max(openCost, totalBytes / minPartitionNum))`` — so both shapes scale:
 thousands of shards fan out one-split-per-file with no coordination,
-and a directory of FEW large archives (the r13 bench fixture: 8 shards
-on 32 cores, measured 8<->32-core scaling ratio ~1.0) still fills the
-cluster.  A range reader RESYNCS to the next gzip member boundary
-(magic scan + trial decode — the member-per-record framing is exactly
-why WARC supports this) and owns every member whose FIRST byte lies in
-its range, so each record is read exactly once and a member straddling
-``end`` still belongs to the range that contains its start.
+and a directory of FEW large archives still fills the cluster.  A
+range reader RESYNCS to the next gzip member boundary (magic scan +
+trial decode — the member-per-record framing is exactly why WARC
+supports this) and owns every member whose FIRST byte lies in its
+range, so each record is read exactly once and a member straddling
+``end`` still belongs to the range that contains its start.  A corrupt
+member fails the read in either kind of split.
 
 Member decode in the source rides zlib (guide §4.2: hand bulk bytes to
 native code — the scan is the operator here, and pure-Python inflate
@@ -86,6 +86,7 @@ class WarcShardPartition(InputPartition):
 
 _GZ_MAGIC = b"\x1f\x8b\x08"  # magic + CM=deflate
 _READ_CHUNK = 1 << 20
+_FEED = 1 << 16
 
 # Spark FilePartition sizing defaults, scaled for a Python source: the
 # open cost floors the split so thousands of small shards still plan
@@ -98,64 +99,82 @@ def _iter_member_range(path: str, start: int, end: int | None):
     """Yield ``(offset, inflated_bytes)`` for every gzip member whose
     FIRST byte lies in ``[start, end)`` of the multi-member archive at
     ``path``.  ``start > 0`` resyncs: scan for the gzip magic and
-    confirm a candidate by trial-decoding the whole member (zlib
-    verifies CRC-32 + ISIZE; a false magic hit inside compressed bytes
-    fails the trial and the scan moves on).  A member straddling
-    ``end`` is decoded to completion — it belongs to the range that
-    contains its start, the same ownership rule as Avro/Hadoop range
-    readers, so consecutive ranges partition the record stream
-    exactly."""
+    confirm a candidate by decoding the whole member (zlib verifies
+    CRC-32 + ISIZE), which is then yielded as the range's first member.
+    A failed candidate is a false magic hit inside compressed bytes,
+    unless its first inflated bytes read ``WARC/``: then it is a real
+    record whose member is corrupt, and the read raises, as a
+    whole-file read does.  A member straddling ``end`` is decoded to
+    completion — it belongs to the range that contains its start, the
+    same ownership rule as Avro/Hadoop range readers, so consecutive
+    ranges partition the record stream exactly.  The file is read
+    forward once, in ``_READ_CHUNK`` pieces."""
     import zlib
 
     with open(path, "rb") as fh:
-        fh.seek(0, os.SEEK_END)
-        size = fh.tell()
+        size = os.fstat(fh.fileno()).st_size
         limit = size if end is None else min(end, size)
-        pos = start
-        if pos > 0:  # resync to the first member boundary at/after pos
-            fh.seek(pos)
-            window = fh.read(min(limit - pos + len(_GZ_MAGIC), size - pos))
-            found = -1
-            at = 0
+        pos, buf, off = start, b"", 0
+        if start > 0:  # resync to the first member boundary at/after start
+            fh.seek(start)
+            window = fh.read(limit - start + len(_GZ_MAGIC) - 1)
+            hit = window.find(_GZ_MAGIC)
             while True:
-                hit = window.find(_GZ_MAGIC, at)
-                if hit < 0 or pos + hit >= limit:
+                if hit < 0 or start + hit >= limit:
                     return  # no member starts in this range
-                cand = pos + hit
-                # trial decode: a genuine boundary inflates cleanly
-                # through the CRC-checked trailer
+                pos = start + hit
+                fh.seek(start + len(window))
                 try:
-                    d = zlib.decompressobj(wbits=31)
-                    fh.seek(cand)
-                    ok = False
-                    while not d.eof:
-                        chunk = fh.read(_READ_CHUNK)
-                        if not chunk:
-                            break
-                        d.decompress(chunk)
-                    ok = d.eof
-                except zlib.error:
-                    ok = False
-                if ok:
-                    found = cand
+                    member, used, buf, off = _inflate_member(fh, window, hit)
                     break
-                at = hit + 1
-            pos = found
+                except (zlib.error, ValueError) as err:
+                    fh.seek(pos)
+                    try:
+                        head = zlib.decompressobj(wbits=31).decompress(
+                            fh.read(_FEED), 5
+                        )
+                    except zlib.error:
+                        head = b""
+                    if head == b"WARC/":
+                        raise ValueError(
+                            f"corrupt gzip member at offset {pos} of {path}"
+                        ) from err
+                hit = window.find(_GZ_MAGIC, hit + 1)
+            yield pos, member
+            pos += used
         while pos < limit:
-            fh.seek(pos)
-            d = zlib.decompressobj(wbits=31)
-            parts = []
-            fed = 0
-            while not d.eof:
-                chunk = fh.read(_READ_CHUNK)
-                if not chunk:
-                    raise ValueError(
-                        f"truncated gzip member at offset {pos} of {path}"
-                    )
-                parts.append(d.decompress(chunk))
-                fed += len(chunk)
-            yield pos, b"".join(parts)
-            pos += fed - len(d.unused_data)
+            try:
+                member, used, buf, off = _inflate_member(fh, buf, off)
+            except (zlib.error, ValueError) as err:
+                raise ValueError(
+                    f"corrupt gzip member at offset {pos} of {path}"
+                ) from err
+            yield pos, member
+            pos += used
+
+
+def _inflate_member(fh, buf: bytes, off: int) -> tuple[bytes, int, bytes, int]:
+    """Inflate the gzip member starting at ``buf[off]``, reading on from
+    ``fh`` (positioned right after ``buf``) as needed.  Returns the
+    inflated bytes, the member's length, and the buffer and offset of
+    the bytes that follow it.  zlib is fed at most ``_FEED`` bytes at a
+    time, so the copy it makes of the bytes past a member stays small."""
+    import zlib
+
+    d = zlib.decompressobj(wbits=31)
+    parts = []
+    used = 0
+    while not d.eof:
+        if off >= len(buf):
+            buf, off = fh.read(_READ_CHUNK), 0
+            if not buf:
+                raise ValueError("truncated gzip member")
+        piece = memoryview(buf)[off : off + _FEED]
+        parts.append(d.decompress(piece))
+        n = len(piece) - len(d.unused_data)
+        off += n
+        used += n
+    return b"".join(parts), used, buf, off
 
 
 class WarcReader(DataSourceReader):
@@ -179,8 +198,7 @@ class WarcReader(DataSourceReader):
         larger than the effective split size — Spark's FilePartition
         sizing (min(maxPartitionBytes, max(openCost,
         total/minPartitionNum))), so few-large-archive directories
-        still fan out across every core (the r13 bench fixture planned
-        8 splits on 32 cores and scaled ~1.0 from 8 to 32 cores)."""
+        still fan out across every core."""
         files = sorted(
             f for f in os.listdir(self.dir) if f.endswith(".warc.gz")
         )

@@ -52,6 +52,19 @@ def test_bloom_missing_term_is_empty_not_error(spark):
     assert got == []
 
 
+def test_bloom_lookup_build_runs_only_the_sidecar_collect(spark, count_jobs):
+    """Once the stored index is resolved, building the lookup runs one
+    Spark job, the sidecar's candidate-file collect: the candidate read
+    takes the index's schema instead of inferring it."""
+    idx = stored_index_dir(spark, SF, "bloomed")
+    bloom_pruned_lookup(spark, idx, idx + "_bloom", "scan")
+    df, jobs = count_jobs(
+        lambda: bloom_pruned_lookup(spark, idx, idx + "_bloom", "scan")
+    )
+    assert jobs == 1
+    assert _lookup_rows(df, "scan") == _lookup_rows(spark.read.parquet(idx), "scan")
+
+
 def test_bloom_actually_skips_files_within_the_letter_dir(spark):
     idx = stored_index_dir(spark, SF, "bloomed")
     letter_files = glob.glob(os.path.join(idx, "letter=s", "*.parquet"))

@@ -159,12 +159,174 @@ def test_validate_names_files_the_spark_listing_skips(spark, tmp_path):
 
 
 def test_read_corpus_doc_id_map_is_a_local_relation(spark, tmp_path):
-    """The doc-id map is a LocalRelation, so its broadcast runs no
-    Python stage (a LogicalRDD built from a Python list ran one, under
-    a second Python worker factory)."""
+    """The whole-file read starts from a LocalRelation of (doc_id,
+    path) that the tasks open: no Python RDD (a LogicalRDD built from a
+    Python list ran a Python stage under a second worker factory) and
+    no join against the doc-id map."""
     docs = read_corpus(spark, make_corpus(tmp_path), wholetext=True)
     plan = docs._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert "Join" not in plan, plan
+
+
+def _manifest(tmp_path, blobs: dict[str, bytes]) -> str:
+    d = tmp_path / "corpus"
+    d.mkdir()
+    for name, data in blobs.items():
+        (d / name).write_bytes(data)
+    mf = tmp_path / "m.txt"
+    mf.write_text(f"{len(blobs)}\n" + "\n".join(str(d / n) for n in blobs) + "\n")
+    return str(mf)
+
+
+def test_wholetext_read_is_byte_identical_to_spark_wholetext_scan(spark, tmp_path):
+    """The task-side read emits each file's exact bytes, the bytes
+    Spark's wholetext scan yields: CR, tab, the Kelvin sign (which
+    lower-cases to ASCII k), non-ASCII, an invalid UTF-8 byte, with and
+    without a trailing newline."""
+    from pyspark.sql import functions as F
+
+    blobs = {
+        "cr.txt": b"alpha\rbeta\r\ngamma\n",
+        "tab.txt": b"one\ttwo\tthree\n",
+        "kelvin.txt": "\u212a kelvin caf\u00e9 na\u00efve\n".encode(),
+        "bad.txt": b"ok \xff \xc3 bad\n",
+        "no_newline.txt": b"no trailing newline",
+    }
+    mf = _manifest(tmp_path, blobs)
+    docs = read_corpus(spark, mf, validate=True, wholetext=True)
+    got = {
+        r.doc_id: bytes(r.b)
+        for r in docs.select("doc_id", F.col("text").cast("binary").alias("b")).collect()
+    }
+    paths = [str(tmp_path / "corpus" / n) for n in blobs]
+    scan = spark.read.text(paths, wholetext=True).select(
+        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("name"),
+        F.col("value").cast("binary").alias("b"),
+    )
+    want = {list(blobs).index(r.name) + 1: bytes(r.b) for r in scan.collect()}
+    assert got == want
+    assert got == {i: b for i, b in enumerate(blobs.values(), 1)}
+
+
+def test_wholetext_empty_file_gives_no_row(spark, tmp_path):
+    mf = _manifest(tmp_path, {"a.txt": b"alpha\n", "empty.txt": b"", "b.txt": b"beta\n"})
+    docs = read_corpus(spark, mf, validate=True, wholetext=True)
+    assert sorted(r.doc_id for r in docs.collect()) == [1, 3]
+
+
+def test_wholetext_missing_path_raises_naming_it(spark, tmp_path):
+    """validate=True stats every path on the driver and names the
+    missing or non-regular ones; without it, the task that opens a
+    missing file raises."""
+    mf = _manifest(tmp_path, {"ok.txt": b"alpha\n"})
+    gone = tmp_path / "corpus" / "gone.txt"
+    adir = tmp_path / "corpus" / "adir"
+    adir.mkdir()
+    ok = tmp_path / "corpus" / "ok.txt"
+    (tmp_path / "m.txt").write_text(f"3\n{ok}\n{gone}\n{adir}\n")
+    with pytest.raises(RuntimeError, match="2 paths are missing or not regular") as err:
+        read_corpus(spark, mf, validate=True, wholetext=True)
+    assert str(gone) in str(err.value) and str(adir) in str(err.value)
+    (tmp_path / "m.txt").write_text(f"2\n{ok}\n{gone}\n")
+    docs = read_corpus(spark, mf, wholetext=True)
+    with pytest.raises(Exception, match="gone.txt"):
+        docs.collect()
+
+
+def test_wholetext_reads_underscore_and_dot_names(spark, tmp_path):
+    """Spark's file listing skips names starting with '_' or '.'; the
+    task-side read opens them like any other file (line mode still
+    refuses them, see test_validate_names_files_the_spark_listing_skips)."""
+    mf = _manifest(
+        tmp_path, {"doc.txt": b"alpha\n", "_hidden.txt": b"beta\n", ".dot.txt": b"gamma\n"}
+    )
+    docs = read_corpus(spark, mf, validate=True, wholetext=True)
+    assert {r.doc_id: r.text for r in docs.collect()} == {
+        1: "alpha\n",
+        2: "beta\n",
+        3: "gamma\n",
+    }
+
+
+def test_slice_plan_balances_bytes_per_task(spark, tmp_path):
+    """slice_plan keeps LocalTableScan's equal-count contiguous slices
+    (at most k of them) and balances their bytes; the read really hands
+    each planned group to one task."""
+    from pyspark.sql import functions as F
+
+    from inverted_index_using_the_map_reduce_paradigm_spark.sources.manifest import slice_plan
+
+    sizes = list(range(1, 401))
+    for k in (1, 4, 7, 16):
+        groups = slice_plan(sizes, k)
+        n = len(sizes)
+        assert [len(g) for g in groups] == [(i + 1) * n // k - i * n // k for i in range(k)]
+        assert sorted(i for g in groups for i in g) == list(range(n))
+        per_slice = [sum(sizes[i] for i in g) for g in groups]
+        assert max(per_slice) - min(per_slice) <= k, (k, per_slice)
+    assert len(slice_plan([5, 3], 4)) == 2
+    assert slice_plan([], 4) == []
+
+    # manifest order puts the big files first: unplanned, the first
+    # task would read them all
+    sizes = [4000 - 300 * i for i in range(12)]
+    mf = _manifest(tmp_path, {f"f{i:02d}.txt": b"x" * n for i, n in enumerate(sizes)})
+    k = spark.sparkContext.defaultParallelism
+    docs = read_corpus(spark, mf, wholetext=True)
+    by_task: dict[int, set[int]] = {}
+    for r in docs.select("doc_id", F.spark_partition_id().alias("p")).collect():
+        by_task.setdefault(r.p, set()).add(r.doc_id)
+    planned = [{i + 1 for i in g} for g in slice_plan(sizes, k)]
+    assert [by_task[p] for p in sorted(by_task)] == planned
+
+
+def test_path_scheme_picks_the_reader(spark, tmp_path):
+    """A plain path or ``file:`` URI names a local file, read in the
+    tasks; any other scheme goes to Spark's scan, sized and probed
+    through Hadoop's FileSystem (run here on a ``file:`` URI sent down
+    that branch)."""
+    from inverted_index_using_the_map_reduce_paradigm_spark.sources.manifest import (
+        _ends_nl,
+        _local_path,
+        _size,
+    )
+
+    p = tmp_path / "x.txt"
+    p.write_bytes(b"alpha\n")
+    q = tmp_path / "y.txt"
+    q.write_bytes(b"no newline")
+    assert _local_path("hdfs://nn:8020/c/a.txt") is None
+    assert _local_path("s3a://bucket/a.txt") is None
+    for form in (str(p), p.as_uri(), f"file:{p}", f"file://localhost{p}"):
+        assert _local_path(form) == str(p), form
+    assert _size(spark, p.as_uri(), None) == 6 and _ends_nl(spark, p.as_uri(), None)
+    assert not _ends_nl(spark, q.as_uri(), None)
+    mf = tmp_path / "m.txt"
+    mf.write_text(f"2\n{p.as_uri()}\n{q}\n")
+    docs = read_corpus(spark, str(mf), validate=True, wholetext=True)
+    assert "Join" not in docs._jdf.queryExecution().optimizedPlan().toString()
+    assert {r.doc_id: r.text for r in docs.collect()} == {1: "alpha\n", 2: "no newline"}
+
+
+def test_wholetext_build_runs_three_jobs(spark, tmp_path, count_jobs):
+    """A warm CLI build (validated whole-file read, Arrow tokenizer,
+    letter sink) runs three Spark jobs: no file listing, no doc-id
+    broadcast."""
+    from inverted_index_using_the_map_reduce_paradigm_spark.operators.inverted_index import (
+        formatted_index,
+    )
+
+    manifest = make_corpus(tmp_path)
+
+    def build():
+        docs = read_corpus(spark, manifest, validate=True, wholetext=True)
+        write_letter_index(formatted_index(docs, arrow_tokenizer=True), str(tmp_path / "out"))
+
+    build()
+    _, jobs = count_jobs(build)
+    assert jobs == 3
+    assert (tmp_path / "out" / "a.txt").read_text() == "apple:[3]\n"
 
 
 def test_validate_raises_when_a_manifest_entry_is_lost(spark, tmp_path, monkeypatch):

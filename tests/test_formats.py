@@ -406,13 +406,14 @@ def test_avro_python_source_matches_canonical_library(spark, tmp_path):
 
 
 def test_warc_datasource_partitions_per_archive(spark, tmp_path):
-    """Split model (r14): small shards plan ONE InputPartition per
+    """Split model: small shards plan ONE InputPartition per
     .warc.gz file (the openCost floor keeps many-small-files at the
     FileScan model), while forced byte-range splits resync on gzip
     member boundaries and recover the IDENTICAL record set — so a
     directory of few large archives fans out past the file count.  A
     shard with a corrupted member still fails loud through the CRC
-    check (zlib trailer verification)."""
+    check (zlib trailer verification), also when it is the first
+    member of a byte range."""
     import glob
     import os
 
@@ -434,7 +435,7 @@ def test_warc_datasource_partitions_per_archive(spark, tmp_path):
     assert len(rows) == 500  # one response record per document
     assert all(r[1] % N_SHARDS == int(r[0].split("-")[1].split(".")[0]) for r in rows)
 
-    # byte-range splits (VERDICT r13 item 5): force ~4 KiB ranges; the
+    # byte-range splits: force ~4 KiB ranges; the
     # resync walk must plan MORE partitions than files and yield the
     # exact same rows, each exactly once
     forced = WarcReader(
@@ -461,6 +462,36 @@ def test_warc_datasource_partitions_per_archive(spark, tmp_path):
 
     with _pytest.raises(Exception):
         list(WarcReader({"path": bad}).read(WarcReader({"path": bad}).partitions()[0]))
+
+    # a corrupt member that is the first to start in a forced ~4 KiB
+    # range must fail loud too, not pass for a false magic hit at the
+    # resync (its records would vanish from every range)
+    import zlib
+
+    blob = bytearray(open(p0, "rb").read())
+    starts, at = [], 0
+    while at < len(blob):
+        starts.append(at)
+        d = zlib.decompressobj(wbits=31)
+        d.decompress(bytes(blob[at:]))
+        at = len(blob) - len(d.unused_data)
+    first, nxt = next(
+        (s, n)
+        for prev, s, n in zip(starts, starts[1:], starts[2:])
+        if s // 4096 > prev // 4096 and s % 4096
+    )
+    blob[(first + nxt) // 2] ^= 0xFF
+    bad_range = str(tmp_path / "bad_range")
+    os.makedirs(bad_range)
+    open(os.path.join(bad_range, "shard-0.warc.gz"), "wb").write(bytes(blob))
+    forced_bad = WarcReader(
+        {"path": bad_range, "split_mib": str(4096 / (1 << 20)), "min_partitions": "64"}
+    )
+    franges = forced_bad.partitions()
+    assert any(p.start == first // 4096 * 4096 for p in franges)
+    with _pytest.raises(ValueError, match=f"corrupt gzip member at offset {first}"):
+        for p in franges:
+            list(forced_bad.read(p))
 
 
 def test_warc_stream_source_is_exactly_once_across_arrivals(spark, tmp_path):

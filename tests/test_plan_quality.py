@@ -863,7 +863,7 @@ _ONCE = "writes its per-process artifact on the session's first build"
 BUILD_JOBS_ALLOWED = {
     # per-process artifacts, written once and then read by plan only
     "avro_roundtrip": f"{_ONCE}: the Avro copy of documents",
-    "bloom_pruned_lookup": f"{_ONCE} (bloomed index + sidecar); collects the sidecar's candidate files",
+    "bloom_pruned_lookup": f"{_ONCE} (bloomed index + sidecar); then one job, the sidecar's candidate-file collect",
     "boolean_and_stored": f"{_ONCE}: the flat stored index",
     "index_upsert_acid": f"{_ONCE}: the stored index as a transaction-log table",
     "interchange_roundtrip": f"{_ONCE}: the interchange-format copies",
