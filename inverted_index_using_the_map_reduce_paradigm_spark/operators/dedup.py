@@ -224,16 +224,11 @@ def shingle_pair_counts(docs: DataFrame, hot_cap: int = HOT_SHINGLE_CAP) -> Data
         "doc_id", "n_sh", F.explode("shingles").alias("s")
     ).select("doc_id", "n_sh", F.xxhash64("s").alias("h"))
     ex = _drop_hot_keys(ex, ["h"], hot_cap)
-    # materialize the exploded (doc_id, n_sh, h) table before the
-    # self-join — the signature-store rule (see hamming_band_pairs):
-    # the shingle UDF's resultId defeats canonical-plan reuse, so
-    # WITHOUT this each join side re-runs tokenize+shingle over the
-    # whole corpus (measured at sf0.1: 4 ArrowEvalPython nodes in the
-    # executed plan vs 0, 1.42 s -> 0.45 s per execution, and even
-    # end-to-end INCLUDING the materialization 1.85 s -> 1.60 s).
-    # At 100 TB this store is the per-shingle posting a dedup pipeline
-    # persists at ingest anyway.
-    ex = materialize(ex)
+    # No store before the self-join: both sides are the identical
+    # window-filtered subplan, so the final adaptive plan runs the
+    # shingle UDF once and the second side reads a ReusedExchange
+    # (pinned by test_shingle_pair_counts_reuses_one_python_pass), and
+    # the build runs no Spark job.
     a = ex.alias("a")
     b = ex.alias("b")
     return (
@@ -556,13 +551,11 @@ def minhash_pairs(docs: DataFrame, band_cap: int = HOT_BAND_CAP) -> DataFrame:
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    # r13 (optimization round, guide §4.4-class defect): the verify
-    # join consumes ``sets`` TWICE (doc_a side and doc_b side), and the
-    # shingle pandas UDF's resultId defeats canonical-plan reuse, so
-    # each side re-ran scan + semi-join + shingle UDF — two extra
-    # ArrowEvalPython passes in the executed plan.  Materialize the
-    # candidate-bounded shingle store once (the same signature-store
-    # rule as shingle_pair_counts / contamination_check); both join
+    # The verify join consumes ``sets`` TWICE (doc_a side and doc_b
+    # side), and without a store each side re-ran scan + semi-join +
+    # shingle UDF — two extra ArrowEvalPython passes in the executed
+    # plan.  Materialize the candidate-bounded shingle store once (the
+    # same signature-store rule as contamination_check); both join
     # sides read the checkpointed table: 4 Python eval nodes -> 2.
     sets = materialize(
         _shingle_sets(docs.join(cand_ids, "doc_id", "left_semi")).select(

@@ -26,6 +26,22 @@ def cpu_count() -> int:
 # hundreds of times too fine.
 _BYTES_PER_INITIAL_PARTITION = 16 << 20
 
+# Entries in Spark's cache of compiled generated classes (whole-stage
+# codegen and projections).  The cache is an LRU keyed by the generated
+# source, 100 entries by default, and the engine's plan working set is
+# far larger.  Measured on a 4-core host (PySpark 4.1.2, JDK 17), each
+# figure per pass over already-built DataFrames:
+# * the 19 perfbench mix queries at sf0.01 recompile 250-254 classes on
+#   every pass at 100 entries, and 0-10 at 4096 (2.9 -> 2.3 s per pass);
+# * every registered query at sf0.001 compiles 2,859 distinct classes
+#   (701 at build, 2,158 on the first run), so 4096 holds the registry;
+#   the second run compiles 3,175 classes at 100 entries and 152 at 4096
+#   (29.9 -> 22.8 s).
+# A larger cache does not grow metaspace: after those two registry runs
+# the JVM had loaded 48,584 classes and unloaded 5,166 at 100 entries,
+# 40,568 and 206 at 4096, with metaspace at 254 and 246 MB.
+CODEGEN_CACHE_ENTRIES = 4096
+
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -36,9 +52,8 @@ def _dir_bytes(path: str) -> int:
     LOCAL filesystem only: a remote URI (``hdfs://``, ``s3a://``, …)
     cannot be os.walk'ed, so return -1 ("unknown") instead of a silent
     0 that would collapse the derived shuffle width to the core-count
-    floor on exactly the deployments where the cliff matters (r14,
-    VERDICT r13 item 2).  ``file:`` URIs are walkable after stripping
-    the scheme."""
+    floor on exactly the deployments where the width matters.  ``file:``
+    URIs are walkable after stripping the scheme."""
     if "://" in path:
         if path.startswith("file://"):
             path = path[len("file://"):]
@@ -63,54 +78,40 @@ def _dir_bytes(path: str) -> int:
 def initial_partitions(
     cpus: int, data_bytes: int | None = None, *, requested: int = 1
 ) -> int:
-    """Scale-ADAPTIVE initial shuffle-partition count (r13 optimization
-    round, guide §2.2 + §1.2): the useful width of a shuffle tracks the
-    DATA VOLUME, not a constant.  The previous fixed ``4 * cpus`` was
-    sized for the measured x256 cliff (ngram_jaccard_dedup: 70.5 s at
-    32 partitions vs 44.4 s at 128 — per-partition join state outgrew
-    the task) but taxed every small-input query with 4x more shuffle
-    blocks than its data could fill — measured at bench scale: a plain
-    1M-row/1000-group aggregate reads ~2.2 s with initialPartitionNum
-    128 vs ~1.1 s at 32, pure AQE-coalesce and block bookkeeping
-    overhead.  Derive it instead: one initial partition per 16 MiB of
-    input, floored at the core count (never less parallel than the
-    machine), capped at 32x cores (the same upper-bound role the old
-    constant played, two decades higher).  The x256 corpus (2.6 GB)
-    lands at ~166 >= the measured-needed 128, so the cliff protection
-    is PRESERVED by derivation instead of by constant; scripts that
-    build their own larger corpora (scale_sweep) re-derive per
-    multiplier via this function and set the runtime conf.  Override
-    with ``SPARK_GRAFT_INITIAL_PARTITIONS`` when benching partitioning
-    itself: the explicit value is used exactly as given.  Only the
-    DERIVED value floors at ``requested``, the caller's explicit
-    shuffle width (with coalescing on, initialPartitionNum IS the
-    effective width, so a bound derived from a different directory
-    must not undercut it).
+    """Scale-adaptive initial shuffle-partition count: the useful width
+    of a shuffle tracks the data volume, not a constant.
 
-    r14 (VERDICT r13 items 1-2): the 32-core bench-scale derivation
-    (= cores) was re-validated by an interleaved quiet-host A/B on the
-    two explode-join queries the old constant protected —
-    ngram_jaccard_dedup 0.97 s at 32 vs 1.11 s at 128, market_basket
-    1.64 vs 1.92 (plans/r14/ab_initial_partitions_hot_queries.json) —
-    so the driver's r13 32-core blowups were host-stall artifacts, not
-    this bound.  When the data volume is UNKNOWN (remote URI the stat
-    walk cannot see, empty or not-yet-generated directory) the floor is
-    ``4 * cpus``, never ``cpus``: silently reinstating the x256 cliff
-    on a cluster because os.walk returned nothing is exactly the
-    failure mode the 100 TB posture exists to avoid.
+    * One initial partition per 16 MiB of input, floored at the core
+      count (never less parallel than the machine) and capped at 32x
+      cores.  A fixed ``4 * cpus`` taxed every small-input query with
+      4x more shuffle blocks than its data could fill: a 1M-row /
+      1000-group aggregate read ~2.2 s at 128 initial partitions
+      against ~1.1 s at 32 (32 cores), pure AQE-coalesce and block
+      bookkeeping.  At bench scale the derived width (= cores) also beat
+      4x cores on the explode-join queries: ``ngram_jaccard_dedup``
+      0.97 s against 1.11 s, ``market_basket`` 1.64 s against 1.92 s
+      (32 cores, interleaved A/B).
+    * Input bytes understate what an explode-heavy shuffle carries
+      (shingle and pair joins multiply volume 10-50x), so once the input
+      is non-trivial (derived > cores) the result never sits below 4x
+      cores.  That band is what ``ngram_jaccard_dedup`` needed at x256
+      (70.5 s at 32 partitions against 44.4 s at 128, SCALE.md); the
+      x256 corpus (2.6 GB) derives ~166 on its own.  A later x256
+      run with the materialized shingle store did not reproduce that
+      cliff, so the band is insurance, not a measured win: extra
+      initial partitions cost bounded block bookkeeping.
+    * When the data volume is unknown (a remote URI the stat walk cannot
+      see, an empty or not-yet-generated directory) the result is
+      ``4 * cpus``, never ``cpus``, and a note goes to stderr.
+    * ``SPARK_GRAFT_INITIAL_PARTITIONS`` overrides all of this when
+      benching partitioning itself and is used exactly as given.  Only
+      the derived value floors at ``requested``, the caller's explicit
+      shuffle width: with coalescing on, initialPartitionNum IS the
+      effective width, so a bound derived from a different directory
+      must not undercut it.
 
-    r14 expansion-awareness (precautionary): input bytes UNDERSTATE
-    what an explode-heavy shuffle carries (shingle/pair joins multiply
-    volume 10-50x), so once the input is non-trivial (derived > cores)
-    the result never sits below 4x cores — the constant the historical
-    x256 cliff measurement sized (SCALE.md r7: 70.5 s at 32 partitions
-    vs 44.4 s at 128, pre-materialize query shape).  The r14 x256
-    re-measurement could not REPRODUCE that cliff in the current
-    materialized-store shape (52-vs-128 interleaved A/B reads 116 vs
-    134 s with 2-3x within-arm host-phase spread — SCALE.md r14), so
-    the floor is kept as cheap insurance, not as a measured win: extra
-    initial partitions cost bounded block bookkeeping, the cliff's
-    failure mode did not."""
+    Scripts that build their own larger corpora (scale_sweep) re-derive
+    per multiplier via this function and set the runtime conf."""
     env = os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS")
     if env:
         try:
@@ -131,9 +132,6 @@ def initial_partitions(
 
         data_bytes = _dir_bytes(DEFAULT_SF_DIR)
     if data_bytes is None or data_bytes < 0:
-        # unknown volume: the measured-safe constant floor — and say so
-        # (ADVICE r13: the silent degradation was the bug, not the
-        # fallback itself)
         import sys
 
         print(
@@ -144,11 +142,45 @@ def initial_partitions(
         return max(4 * cpus, requested)
     derived = int(data_bytes) // _BYTES_PER_INITIAL_PARTITION
     if derived <= cpus:
-        # small input: the A/B-validated bench-scale value
         return max(cpus, requested)
-    # non-trivial input: never below the 4x-cores cliff band (see the
-    # x256 measurements in the docstring)
     return max(int(min(max(4 * cpus, derived), 32 * cpus)), requested)
+
+
+def _mem_total_bytes() -> int | None:
+    """Physical memory from ``MemTotal`` in /proc/meminfo, or None where
+    there is no such file."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def driver_memory(mem_total_bytes: int | None) -> str:
+    """``spark.driver.memory`` for a host with ``mem_total_bytes`` of
+    physical memory.
+
+    In local mode the driver JVM is the only executor, so its heap is
+    the engine's working memory, and it shares the host with the Python
+    workers (about 410 MB of PSS in all at ``local[4]``) and the calling
+    process.  The default is half of physical memory, at most 48 GiB:
+    7.8 GiB on a 15.7 GiB host, above the 3-5 GB of tree PSS the 19-query
+    perfbench mix shows, leaving the other half to the workers, the
+    JVM's off-heap memory and the caller.  A fixed 48g default let the
+    heap grow until the kernel OOM-killed the JVM on such a host
+    (``anon-rss`` 14.7 GB).  Where physical memory is
+    unknown the default is 4g.  ``SPARK_GRAFT_DRIVER_MEM`` overrides
+    all of this and is used exactly as given."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    if not mem_total_bytes:
+        return "4g"
+    half_mib = mem_total_bytes >> 21
+    return f"{min(half_mib, 48 << 10)}m"
 
 
 def get_spark(app_name: str = "repo_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
@@ -164,18 +196,11 @@ def get_spark(app_name: str = "repo_spark", *, shuffle_partitions: int | None = 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # ---- shuffle sizing --------------------------------------------
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Scale-adaptive initial bound (r13): derived from the input
-        # volume under $SPARK_GRAFT_SF_DIR — one initial partition per
-        # 16 MiB, floored at cores, capped at 32x cores — instead of
-        # the previous fixed 4x cores.  See initial_partitions() for
-        # the measurements on both sides (the x256 ngram_jaccard cliff
-        # that sets the upper need, and the small-input AQE-coalesce
-        # overhead that the constant was taxing).  On a real cluster
-        # this is the same recommended AQE posture: a high,
-        # DATA-DERIVED initial bound; runtime decides the final widths.
-        # The derived bound floors at the requested shuffle width (the
-        # CLI's mappers/reducers contract); an explicit
-        # SPARK_GRAFT_INITIAL_PARTITIONS is used as given.
+        # Data-derived initial bound (see initial_partitions): AQE's
+        # coalescing can only merge partitions, so start from a high,
+        # volume-derived width and let runtime decide the final ones.
+        # It floors at the requested shuffle width (the CLI's
+        # mappers/reducers contract).
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(initial_partitions(cpus, requested=shuffle_partitions)),
@@ -203,12 +228,12 @@ def get_spark(app_name: str = "repo_spark", *, shuffle_partitions: int | None = 
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        # ---- pause tolerance (r14) --------------------------------------
+        # ---- pause tolerance ---------------------------------------------
         # In local mode the executor IS the driver JVM, so a long GC or
         # host pause makes the executor miss heartbeats and the
-        # HeartbeatReceiver then kills the application's ONLY executor —
-        # observed twice on the x256 sweep (140-170 s freezes -> job
-        # death mid-run).  The heartbeat carries no liveness signal
+        # HeartbeatReceiver then kills the application's ONLY executor
+        # (seen on the x256 sweep: 140-170 s freezes -> job death
+        # mid-run).  The heartbeat carries no liveness signal
         # between threads of one process; raise the tolerance so a pause
         # degrades to slowness instead of job failure.  On a cluster
         # these are the standard long-GC-pause settings.
@@ -217,7 +242,11 @@ def get_spark(app_name: str = "repo_spark", *, shuffle_partitions: int | None = 
         # ---- determinism for oracle comparison -------------------------
         .config("spark.sql.session.timeZone", "UTC")
         # ---- local-mode memory (driver == the one JVM) -----------------
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory(_mem_total_bytes()))
+        # ---- compiled-class reuse ---------------------------------------
+        # A static conf: it takes effect only when set before the first
+        # session starts (see CODEGEN_CACHE_ENTRIES).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

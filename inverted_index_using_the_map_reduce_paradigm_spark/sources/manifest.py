@@ -379,8 +379,20 @@ def _join_ids(
     corpus = scanned.join(F.broadcast(mapping), "abs_path").select("doc_id", "text")
     if validate:
         expected = [key for _, key, local in entries if _size(spark, key, local) > 0]
-        _check_listed(spark, manifest_path, expected, corpus.inputFiles())
+        _check_listed(spark, manifest_path, expected, _input_files(corpus))
     return corpus
+
+
+def _input_files(df: DataFrame) -> list[str]:
+    """``df.inputFiles()`` in one transfer: the JVM joins the file URIs
+    with NUL, which no path holds, and Python splits the string once.
+    PySpark's own ``inputFiles()`` converts the array one element per
+    py4j call (10-18 ms for 400 files, against 0.6 ms for the JVM
+    listing itself)."""
+    jvm = df.sparkSession._jvm
+    files = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(df._jdf.inputFiles())
+    joined = files.mkString("\0")
+    return joined.split("\0") if joined else []
 
 
 def _local_path(p: str) -> str | None:

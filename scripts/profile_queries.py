@@ -10,6 +10,12 @@ this measures, with the same noop-sink methodology as bench.py:
   scheduling overhead, so "how many stages does this plan run" is the
   local proxy for "how many exchanges/passes does this plan need",
   which is exactly the 100 TB cost model too,
+* the number of generated classes Janino COMPILES in the warm run and
+  per timed execution (Spark's ``CodegenMetrics`` compilation count) —
+  the warm count is what the query adds to the codegen cache's working
+  set; after it the query's classes sit in the cache, so a timed count
+  above 0 means the cache is thrashing and every run pays the compile
+  again,
 * the formatted physical plan, written to ``plans/r13/<name>_before.txt``
   (or ``_after.txt`` with ``--after``).
 
@@ -62,6 +68,7 @@ def main() -> None:
     os.makedirs(plans_dir, exist_ok=True)
     spark = get_spark("profile_queries")
     sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     qs = load_all()
     unknown = [n for n in names if n not in qs]
     if unknown:
@@ -75,10 +82,14 @@ def main() -> None:
             print(f"{name}: bench=False, skipping", file=sys.stderr)
             continue
         df = q.fn(spark, SF_DIR)
+        compiled_before = compiles.getCount()
         warm = run_once(df)
+        n_compiled_warm = compiles.getCount() - compiled_before
         group = f"prof_{name}_{suffix}"
         sc.setJobGroup(group, name)
+        compiled_before = compiles.getCount()
         samples = sorted(run_once(df) for _ in range(RUNS))
+        n_compiled = compiles.getCount() - compiled_before
         sc.setJobGroup(None, None)
         med = statistics.median(samples)
         tracker = sc.statusTracker()
@@ -118,6 +129,8 @@ def main() -> None:
                 "jobs_per_run": round(n_jobs / per, 1),
                 "stages_per_run": round(len(stage_ids) / per, 1),
                 "tasks_per_run": round(n_tasks / per, 1),
+                "codegen_compiles_warm": n_compiled_warm,
+                "codegen_compiles_per_run": round(n_compiled / per, 1),
                 "plan_exchanges": n_exch,
                 "plan_python_nodes": n_py,
             }
@@ -125,7 +138,9 @@ def main() -> None:
         print(
             f"{name}: median={med:.3f} warm={warm:.3f} "
             f"jobs/run={n_jobs / per:.1f} stages/run={len(stage_ids) / per:.1f} "
-            f"tasks/run={n_tasks / per:.0f} exch={n_exch} py={n_py}",
+            f"tasks/run={n_tasks / per:.0f} compiles warm={n_compiled_warm} "
+            f"per run={n_compiled / per:.1f} "
+            f"exch={n_exch} py={n_py}",
             flush=True,
         )
 

@@ -138,6 +138,26 @@ def test_input_files_match_input_file_name(spark, tmp_path):
     assert len(seen) == 3
 
 
+def test_input_files_read_in_one_transfer_lists_the_same_files(spark, tmp_path):
+    """validate=True reads the scan's file listing as one NUL-joined
+    string; it lists exactly what DataFrame.inputFiles() lists, for
+    names holding a space and a '+' too, and nothing for a scan of no
+    files."""
+    from inverted_index_using_the_map_reduce_paradigm_spark.sources.manifest import _input_files
+
+    d = tmp_path / "odd dir + more"
+    d.mkdir()
+    paths = []
+    for name in ("with space.txt", "a+b.txt", "plain.txt"):
+        (d / name).write_text("alpha\n")
+        paths.append(str(d / name))
+    df = spark.read.text(paths)
+    listed = _input_files(df)
+    assert sorted(listed) == sorted(df.inputFiles())
+    assert len(listed) == 3
+    assert _input_files(spark.range(1)) == []
+
+
 def test_validate_names_files_the_spark_listing_skips(spark, tmp_path):
     """Spark's file listing drops names starting with '_' or '.' even
     when given explicitly; validate=True must say so and name them

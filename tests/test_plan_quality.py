@@ -883,7 +883,6 @@ BUILD_JOBS_ALLOWED = {
     "near_dup_clusters": "connected-components label propagation until no label changes",
     "word_pagerank": "PageRank iterations, lineage truncated per round",
     # eager stores: a Python kernel's output read by two consumers
-    "containment_dedup": "materialized shingle store read by both self-join sides",
     "contamination_check": "materialized shingle store read by both splits",
     "embedding_near_dup": "corpus count sizes the GEMM block grid",
     "incremental_near_dedup": "materialized signature stores standing in for persisted state",
@@ -893,7 +892,6 @@ BUILD_JOBS_ALLOWED = {
     "multimodal_audiohash_dedup": "materialized audio signature store",
     "multimodal_phash_dedup": "materialized pHash signature store",
     "multimodal_video_dedup": "materialized frame-signature stores",
-    "ngram_jaccard_dedup": "materialized shingle store read by both self-join sides",
     "simhash_dedup": "materialized SimHash store read by both chunk-join sides",
     "word_triangles": "materialized pair table read by three join sides",
     # model fits on the driver: the model is a literal in the plan
@@ -1146,19 +1144,29 @@ def test_substring_dedup_single_span_pass_no_join(spark):
 
 def test_containment_dedup_single_shingle_pass_shared_with_jaccard(spark):
     """containment_dedup rides the same shingle_pair_counts core as
-    ngram_jaccard_dedup, and that core MATERIALIZES the exploded
-    signature table before the self-join (the signature-store rule —
-    a Python UDF's resultId defeats canonical-plan reuse, so the
-    un-materialized form re-ran tokenize+shingle on both join sides).
-    The executed join plan must therefore contain ZERO Python eval
-    nodes, read the materialized store (Scan ExistingRDD) on both
-    sides, and score containment as pure arithmetic on the pair
-    aggregate — no second corpus pass, no extra join."""
+    ngram_jaccard_dedup: the executed plan runs the shingle UDF once
+    (the second self-join side reads a reused exchange, see
+    test_shingle_pair_counts_reuses_one_python_pass) and scores
+    containment as pure arithmetic on the pair aggregate — no second
+    corpus pass, no extra join."""
     df = load_all()["containment_dedup"].fn(spark, SF)
     plan = audit.final_adaptive_plan(df).split("== Initial Plan ==")[0]
-    assert audit.python_eval_count(plan) == 0, plan
-    assert "Scan ExistingRDD" in plan, plan
+    assert audit.python_eval_count(plan) == 1, plan
     assert "least(" in plan  # containment denominator, post-aggregate
+
+
+@pytest.mark.parametrize("name", ["ngram_jaccard_dedup", "containment_dedup"])
+def test_shingle_pair_counts_reuses_one_python_pass(spark, count_jobs, name):
+    """The shingle self-join needs no store: both sides are the same
+    window-filtered subplan, so building the query runs no Spark job
+    and the final adaptive plan runs the shingle UDF once, the second
+    side reading a ReusedExchange of the first."""
+    data.table(spark, SF, "documents")
+    df, jobs = count_jobs(lambda: load_all()[name].fn(spark, SF))
+    assert jobs == 0
+    plan = audit.final_adaptive_plan(df).split("== Initial Plan ==")[0]
+    assert audit.python_eval_count(plan) == 1, plan
+    assert "ReusedExchange" in plan, plan
 
 
 def test_semantic_dedup_one_cluster_shuffle_no_join(spark):
@@ -1687,8 +1695,6 @@ def test_hamming_families_run_signature_kernel_zero_times_in_join(spark):
         "multimodal_audiohash_dedup",
         "incremental_phash_dedup",
         "multimodal_video_dedup",
-        "ngram_jaccard_dedup",
-        "containment_dedup",
     ):
         df = qs[name].fn(spark, SF)
         plan = audit.physical_plan(df)
@@ -1810,3 +1816,67 @@ def test_initial_shuffle_partitions_floor_at_requested_width(spark, monkeypatch)
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def test_driver_memory_default_fits_the_host(spark, monkeypatch):
+    """The default driver heap is derived from physical memory: below
+    it for any host size, well above the query mix's 3-5 GB working set
+    on a 15.7 GiB host, never above 48 GiB; unknown memory reads 4g and
+    SPARK_GRAFT_DRIVER_MEM is used exactly as given.  The live session
+    runs with the derived value."""
+    from inverted_index_using_the_map_reduce_paradigm_spark.session import (
+        _mem_total_bytes,
+        driver_memory,
+    )
+
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == driver_memory(
+        _mem_total_bytes()
+    )
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    gib = 1 << 30
+    host = 16_851_337_216  # MemTotal of a 15.7 GiB host
+
+    def heap(total: int) -> int:
+        v = driver_memory(total)
+        assert v.endswith("m"), v
+        return int(v[:-1]) << 20
+
+    for total in (2 * gib, 4 * gib, host, 64 * gib, 1024 * gib):
+        assert 0 < heap(total) < total, total
+        assert heap(total) <= 48 * gib, total
+    assert heap(host) >= 7 * gib
+    assert driver_memory(None) == "4g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert driver_memory(64 * gib) == "3g"
+
+
+def test_codegen_cache_holds_a_cyclic_working_set(spark):
+    """A workload that cycles through more generated classes than
+    Spark's default codegen cache holds (100) compiles nothing on its
+    second pass: the session sizes the cache above the registry's
+    working set, so a repeated query reuses its compiled classes
+    instead of recompiling them with Janino."""
+    from pyspark.sql import functions as F
+
+    from inverted_index_using_the_map_reduce_paradigm_spark.session import (
+        CODEGEN_CACHE_ENTRIES,
+    )
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        for i in range(60):
+            # the literal i is inlined in the generated source, so each
+            # query compiles its own classes
+            spark.range(64).select(
+                (F.col("id") % (i + 2)).alias("k"), (F.col("id") * i).alias("v")
+            ).groupBy("k").agg(F.sum("v")).collect()
+        return compiles.getCount() - before
+
+    first = one_pass()
+    assert first > 100, first
+    assert one_pass() == 0
