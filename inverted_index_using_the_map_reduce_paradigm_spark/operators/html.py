@@ -219,7 +219,7 @@ def q_warc_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     is wrapped as an HTML page, shipped inside a REAL two-record
     WARC.gz (same encoder as ``warc_gz_extract`` — that query pins the
     container math; this one pins what comes AFTER), decoded back on
-    executors, put through ``html_main_text``, and gated on a minimum
+    executors with zlib, put through ``html_main_text``, and gated on a minimum
     word count before a per-language rollup.
 
     100 TB shape: encode is fixture scaffolding; the measured path is

@@ -5,7 +5,7 @@ processed by Arrow-batched ``mapInPandas`` — the pattern a 100 TB
 image/audio pipeline uses (decode / resize / frame-sample per batch on
 executors, no driver involvement, no row-at-a-time Python).
 
-Codec tiers (r7, PNG promoted r8):
+Codec tiers:
 
 * UNCOMPRESSED container formats have REAL decoders with zero external
   dependencies — a hand-written P6 PPM header parser + numpy raster
@@ -16,16 +16,16 @@ Codec tiers (r7, PNG promoted r8):
   functions of (doc_id, n_chars), so DuckDB independently predicts
   every decoded feature and a parser bug breaks the driver hash.
 * PNG — the most common real compressed image format — has a REAL
-  stdlib-only decoder (r8, ``decode_png``): CRC-verified chunk walk,
+  stdlib-only decoder (``decode_png``): CRC-verified chunk walk,
   concatenated-IDAT zlib inflate, and full inversion of the five
   per-row filters; ``multimodal_png_decode`` round-trips payloads
   whose rows cycle all five filters, oracle-checked the same way.
-  Indexed-color (PLTE) and Adam7-interlaced streams decode too (r9,
-  ``multimodal_png_palette_decode``: bpp=1 defilter + palette
+  Indexed-color (PLTE) and Adam7-interlaced streams decode too
+  (``multimodal_png_palette_decode``: bpp=1 defilter + palette
   expansion; ``multimodal_png_interlaced_decode``: seven independently
   filtered passes scattered back, position-weighted checksum).
-* Baseline sequential JPEG has a REAL stdlib-only decoder too (r8,
-  ``decode_jpeg``; generalized r9 to ``_jpeg_parse``): marker walk,
+* Baseline sequential JPEG has a REAL stdlib-only decoder too
+  (``decode_jpeg``, generalized in ``_jpeg_parse``): marker walk,
   DHT-declared canonical Huffman entropy decode with byte unstuffing,
   DC prediction + EXTEND, AC run/size + ZRL, dezigzag, dequantization,
   exact orthonormal IDCT, 1- or 3-component interleaved scans.
@@ -36,7 +36,7 @@ Codec tiers (r7, PNG promoted r8):
   and ZRL symbols); ``multimodal_jpeg_color_decode`` decodes
   interleaved YCbCr 4:4:4 with per-component quant/Huffman tables —
   all three oracle-checked bit for bit.
-* ``multimodal_jpeg_progressive_decode`` (r10) decodes real SOF2
+* ``multimodal_jpeg_progressive_decode`` decodes real SOF2
   streams builtin: five-scan spectral-selection + successive-
   approximation (DC first/refine, AC first pass with EOB runs, a
   two-step AC refinement ladder) with DRI/RSTn restart intervals
@@ -44,6 +44,9 @@ Codec tiers (r7, PNG promoted r8):
   (interleaved ns=3 DC scans, per-component band scans) and the
   subsampled 4:2:0 variant (MCU-interleaved DC vs raster-order AC
   walks over an MCU-padded coefficient buffer) decode builtin too.
+* Compression codecs (zlib, multi-member gzip under WARC.gz, snappy,
+  LZ4 frame, zstd) round-trip real streams through the installed
+  native decoders: stdlib ``zlib`` and pyarrow's C++ codecs.
 * Remaining codec variants (arithmetic
   coding, WebP, ...) stay import-gated behind PIL (absent in this
   container): ``real_decode`` dispatches P6/PNG/JPEG to the builtin
@@ -62,7 +65,7 @@ extraction parallelism == input partition count.
 from __future__ import annotations
 
 import sys
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark import cloudpickle
@@ -92,8 +95,8 @@ FEATURE_SCHEMA = "doc_id long, n_bytes long, width long, height long, checksum l
 
 def real_decode(payload: bytes) -> tuple[int, int]:
     """Actual image decode: builtin parsers for P6 PPM (no
-    dependency), PNG (stdlib zlib — r8, ``decode_png``), and baseline
-    JPEG (r8, ``decode_jpeg``); PIL for anything else when
+    dependency), PNG (stdlib zlib, ``decode_png``), and baseline
+    JPEG (``decode_jpeg``); PIL for anything else when
     installed."""
     if payload[:2] == b"P6":
         w, h, _maxval, _off = _ppm_header(payload)
@@ -110,7 +113,7 @@ def real_decode(payload: bytes) -> tuple[int, int]:
             w, h, _planes = _jpeg_parse(payload)  # grayscale or YCbCr
             return w, h
         except NotImplementedError:
-            try:  # SOF2 -> the builtin progressive parser (r10)
+            try:  # SOF2 -> the builtin progressive parser
                 w, h, _planes = _jpeg_parse_progressive(payload)
                 return w, h
             except (NotImplementedError, ValueError):
@@ -296,7 +299,7 @@ def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# REAL codecs, dependency-free tier (r7): P6 PPM images, RIFF/PCM WAV
+# REAL codecs, dependency-free tier: P6 PPM images, RIFF/PCM WAV
 # audio.  The synthesis parameters are deterministic functions of
 # (doc_id, n_chars), so the DuckDB oracles predict every DECODED
 # feature independently — the decoders are genuinely exercised and a
@@ -515,7 +518,7 @@ def q_multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# REAL compressed codec, dependency-free (r8): PNG via stdlib zlib.
+# REAL compressed codec, dependency-free: PNG via stdlib zlib.
 # The critical path of the most common real image format — 8-byte
 # signature, chunk walk with CRC32 verification, IHDR, zlib-inflated
 # IDAT (possibly split across chunks), and the five per-row filters
@@ -836,7 +839,7 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# REAL lossy codec, dependency-free (r8): baseline sequential JPEG.
+# REAL lossy codec, dependency-free: baseline sequential JPEG.
 # The full critical path of the other ubiquitous image format — marker
 # walk, DQT/SOF0/DHT/SOS parse, canonical Huffman decode with byte
 # unstuffing, DC prediction + coefficient EXTEND, dezigzag,
@@ -846,7 +849,7 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 3-component baseline stream with sampling factors 1-2 (4:4:4 and
 # 4:2:0 alike), not just this encoder's output.
 # Lossiness is controlled at synthesis: flat 8x8 blocks have DC = 8 x
-# (fill - 128), and the r9 AC variant places coefficients only at
+# (fill - 128), and the AC variant places coefficients only at
 # {0,4}^2 basis positions where the 2-D basis magnitude is exactly
 # 1/8 — so quantization steps of 8 (DC) / 16 (AC) make the round trip
 # EXACT for every value and the DuckDB oracle predicts the decoded
@@ -868,7 +871,7 @@ _JPEG_QAC = 16
 _JPEG_QDC_CHROMA = 16
 # encoder-defined canonical Huffman tables, carried in DHT like any
 # real stream: DC categories 0..11 and an AC set incl. EOB + ZRL and
-# the (run,size) symbols the r9 AC synthesis emits (runs 3/8/9 from
+# the (run,size) symbols the AC synthesis emits (runs 3/8/9 from
 # the zigzag gaps between natural coefficients 4, 32 and 36).
 _JPEG_DC_BITS = [0, 0, 0, 12] + [0] * 12
 _JPEG_DC_VALS = list(range(12))
@@ -1731,7 +1734,7 @@ def q_multimodal_jpeg_ac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a +/- sign pattern), so DuckDB predicts pixel_sum, max_pixel
     and the three quad sums — which project out each AC coefficient
     individually — making the run/size, ZRL and EXTEND paths
-    driver-hash load-bearing (r8 VERDICT item 1)."""
+    driver-hash load-bearing."""
     docs = table(spark, sf_dir, "documents")
     payloads = docs.select(
         "doc_id", _jpeg_ac_payload("doc_id", "n_chars").alias("payload")
@@ -1780,8 +1783,7 @@ def q_multimodal_jpeg_color_decode(
     quantized under a SECOND quant table (DC step 16 -> pixels
     128 + 2*q) and coded with a SECOND Huffman set, so table
     selection, the 3-blocks-per-MCU scan order and per-component DC
-    predictors all change the oracle-predicted per-plane sums (r8
-    VERDICT item 1, color variant)."""
+    predictors all change the oracle-predicted per-plane sums."""
     docs = table(spark, sf_dir, "documents")
     payloads = docs.select(
         "doc_id", _jpeg_color_payload("doc_id", "n_chars").alias("payload")
@@ -1877,7 +1879,7 @@ def q_multimodal_jpeg_420_decode(
     return payloads.mapInPandas(decode_jpegs_color, schema=JPEG_COLOR_SCHEMA)
 
 
-# r9: indexed-color (palette) PNG — the third common PNG layout after
+# Indexed-color (palette) PNG — the third common PNG layout after
 # gray/RGB.  Filters run over 1-byte INDICES (bpp=1 changes every
 # left-neighbor offset in the filter algebra), then PLTE expands to
 # RGB; statistics over the expanded samples make both the defilter and
@@ -2005,7 +2007,7 @@ def q_multimodal_png_palette_decode(
     return payloads.mapInPandas(decode_pngs, schema=PNG_SCHEMA)
 
 
-# r9: Adam7 interlaced RGB PNG.  The synthesis varies along BOTH axes
+# Adam7 interlaced RGB PNG.  The synthesis varies along BOTH axes
 # and per channel, and the query's checksum is POSITION-WEIGHTED —
 # sum/max/mean are permutation-invariant, so a de-interlacer that
 # scattered pixels to the wrong (x, y) could pass them; the weighted
@@ -2175,7 +2177,7 @@ def q_multimodal_png_interlaced_decode(
     )
 
 
-# r9: G.711 mu-law WAV — a REAL compressed telephony audio codec whose
+# G.711 mu-law WAV — a REAL compressed telephony audio codec whose
 # expansion is a pure per-byte formula (no recursive predictor state),
 # so a DuckDB oracle can recompute every decoded sample in closed form.
 # The RIFF container is hand-rolled: stdlib ``wave`` refuses non-PCM
@@ -2231,7 +2233,7 @@ def decode_wav_ulaw(payload: bytes) -> tuple[int, int, int, int, int]:
             # a corrupt length would otherwise surface as a
             # struct.error on the fmt unpack or a silently TRUNCATED
             # data chunk (fewer decoded samples) — fail loud instead,
-            # per the codec tiers' contract (r9 ADVICE)
+            # per the codec tiers' contract
             raise ValueError(
                 f"WAV chunk {cid!r} at {i} claims {clen} bytes but only "
                 f"{len(payload) - i - 8} remain"
@@ -2341,7 +2343,7 @@ def q_multimodal_ulaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(decode_wavs_ulaw, schema=ULAW_SCHEMA)
 
 
-# r9: 16-bit grayscale PNG — the scientific-imaging depth.  The filter
+# 16-bit grayscale PNG — the scientific-imaging depth.  The filter
 # algebra runs over BYTES with a 2-byte left-neighbor offset, then
 # big-endian pairs recombine into samples; a decoder that filtered over
 # samples (or combined little-endian) breaks on every non-None row.
@@ -2428,18 +2430,17 @@ def q_multimodal_png16_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Progressive JPEG (SOF2) — the most common JPEG variant on the web
-# (r9 VERDICT, top real-world codec gap).  Real spectral-selection +
-# successive-approximation coding over the same Huffman/IDCT machinery
-# as the baseline decoder: four scans (DC first pass at Al=1, DC
-# refinement, AC first pass over the 1..63 band at Al=1 with EOB-run
-# coding, AC refinement with correction bits and newly-significant
-# insertion — ITU T.81 G.1.2 / G.2, the same scan script libjpeg's
-# jpeg_simple_progression emits for grayscale).  The fixture reuses
-# the {0,4}^2 integer-exact AC synthesis, so after the refinement
-# scans complete the coefficient buffer equals the baseline-AC
-# quantized values bit for bit and the SAME DuckDB closed-form oracle
-# (_JPEG_AC_BLOCKS_CTE) predicts the decode.
+# Progressive JPEG (SOF2) — the most common JPEG variant on the web.
+# Real spectral-selection + successive-approximation coding over the
+# same Huffman/IDCT machinery as the baseline decoder: four scans (DC
+# first pass at Al=1, DC refinement, AC first pass over the 1..63 band
+# at Al=1 with EOB-run coding, AC refinement with correction bits and
+# newly-significant insertion — ITU T.81 G.1.2 / G.2, the same scan
+# script libjpeg's jpeg_simple_progression emits for grayscale).  The
+# fixture reuses the {0,4}^2 integer-exact AC synthesis, so after the
+# refinement scans complete the coefficient buffer equals the
+# baseline-AC quantized values bit for bit and the SAME DuckDB
+# closed-form oracle (_JPEG_AC_BLOCKS_CTE) predicts the decode.
 # --------------------------------------------------------------------------
 
 # AC table for the progressive scans: every (run 0-15, size 1-4)
@@ -3557,9 +3558,9 @@ def q_multimodal_jpeg_progressive_420_decode(
 
 
 # --------------------------------------------------------------------------
-# Audio codec ladder, rung 2 (r10 — r9 VERDICT item 7): stereo 16-bit
-# PCM (interleaved-frame deinterleave is the classic stereo bug class)
-# and IMA/DVI ADPCM (WAVE format 0x11) — a real 4-bit predictive codec
+# Audio codec ladder, rung 2: stereo 16-bit PCM (interleaved-frame
+# deinterleave is the classic stereo bug class) and IMA/DVI ADPCM
+# (WAVE format 0x11) — a real 4-bit predictive codec
 # with the 89-entry step table, per-nibble index adaptation and
 # predictor clamping.  The ADPCM oracle replicates the whole state
 # machine as a DuckDB RECURSIVE CTE, so every table step, clamp and
@@ -3956,7 +3957,7 @@ def q_multimodal_ima_adpcm_decode(
 
 
 # --------------------------------------------------------------------------
-# Audio codec ladder, rung 3 (r10): G.711 A-law (WAVE format 6) — the
+# Audio codec ladder, rung 3: G.711 A-law (WAVE format 6) — the
 # OTHER half of the international telephony pair (A-law is the E1/
 # European PSTN companded format; mu-law above is the T1/NA one).  The
 # two expansions look deceptively similar but differ in every detail
@@ -4129,7 +4130,7 @@ def q_multimodal_alaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Image codec ladder (r10): GIF — the remaining ubiquitous legacy image
+# Image codec ladder: GIF — the remaining ubiquitous legacy image
 # format, and the only mainstream one built on LZW.  The encoder emits
 # a real GIF89a stream (logical screen descriptor, global color table,
 # a Graphic Control Extension the decoder must skip, image descriptor,
@@ -4424,7 +4425,7 @@ def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Video container tier (r10): MJPEG-in-AVI — the first REAL video path
+# Video container tier: MJPEG-in-AVI — the first REAL video path
 # (the generic frame_sample query treats payloads as opaque bytes; this
 # one parses an actual container and entropy-decodes every frame).  AVI
 # is the RIFF video container: nested LIST chunks (hdrl with the main +
@@ -4656,7 +4657,7 @@ def q_multimodal_avi_mjpeg_decode(
 
 
 # --------------------------------------------------------------------------
-# BMP (r10): the uncompressed Windows bitmap — trivially simple on
+# BMP: the uncompressed Windows bitmap — trivially simple on
 # paper, but every one of its quirks is a classic decode bug: 24-bit
 # pixels are stored B,G,R (not RGB), rows are padded to 4-byte
 # boundaries (so any odd width desyncs a naive reader), and a POSITIVE
@@ -4801,225 +4802,34 @@ def q_multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# DEFLATE (r10): a hand-rolled RFC 1950/1951 INFLATE — the codec under
-# PNG, gzip, zip and HTTP.  Everywhere else in this file the zlib
-# LIBRARY does the entropy layer (PNG calls zlib.decompress); here the
-# decoder itself implements it: LSB-first bit reader, canonical
-# Huffman reconstruction from code lengths, all three block types
-# (stored with LEN/NLEN check, fixed, dynamic with the 16/17/18
-# run-length code-length codes), LZ77 length/distance back-references
-# with their extra-bit tables, and a hand-rolled Adler-32 over the
-# output checked against the zlib trailer.  The encoder is the REAL
-# zlib library — so the decoder must invert genuine deflate streams,
-# not a friendly subset — and the per-doc strategy rotation (stored /
-# Z_FIXED / default) guarantees every block type appears across the
-# corpus.
+# Compression codecs: zlib (DEFLATE), WARC.gz (multi-member gzip),
+# snappy, LZ4 frame and zstd.  Each query compresses every document with
+# the real library and decodes it on executors with the installed native
+# decoder (stdlib zlib, pyarrow's C++ codecs): the decode an ingest job
+# over .jsonl.zst shards or Common Crawl WARC.gz files runs.  The oracle
+# is sha256 of the text, so a decode that is not byte-exact breaks the
+# driver hash; a corrupt payload raises the library's own error.
 # --------------------------------------------------------------------------
 
-_LEN_BASE = [
-    3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31, 35, 43, 51,
-    59, 67, 83, 99, 115, 131, 163, 195, 227, 258,
-]
-_LEN_EXTRA = [
-    0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3, 4, 4, 4,
-    4, 5, 5, 5, 5, 0,
-]
-_DIST_BASE = [
-    1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193, 257, 385,
-    513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193, 12289, 16385,
-    24577,
-]
-_DIST_EXTRA = [
-    0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6, 7, 7, 8, 8, 9, 9, 10,
-    10, 11, 11, 12, 12, 13, 13,
-]
-_CL_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15]
+import hashlib  # noqa: E402
+import zlib  # noqa: E402
+from functools import partial  # noqa: E402
+
+import pyarrow as pa  # noqa: E402
+
+INFLATE_SCHEMA = "doc_id long, n_bytes long, digest string"
 
 
-class _InflateBits:
-    """LSB-first bit reader (RFC 1951 §3.1.1): data bits fill each byte
-    from the least-significant end; Huffman codes are read bit-by-bit
-    and assembled MSB-first by the caller."""
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.nbit = 0
-
-    def bit(self) -> int:
-        if self.pos >= len(self.data):
-            raise ValueError("deflate stream truncated")
-        b = (self.data[self.pos] >> self.nbit) & 1
-        self.nbit += 1
-        if self.nbit == 8:
-            self.nbit = 0
-            self.pos += 1
-        return b
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            v |= self.bit() << i
-        return v
-
-    def align(self) -> None:
-        if self.nbit:
-            self.nbit = 0
-            self.pos += 1
-
-
-def _huffman_from_lengths(lengths: list[int]) -> dict[tuple[int, int], int]:
-    """Canonical Huffman table per RFC 1951 §3.2.2: codes of each
-    length are consecutive integers, ordered by symbol."""
-    max_len = max(lengths, default=0)
-    bl_count = [0] * (max_len + 1)
-    for ln in lengths:
-        if ln:
-            bl_count[ln] += 1
-    code = 0
-    next_code = [0] * (max_len + 1)
-    for ln in range(1, max_len + 1):
-        code = (code + bl_count[ln - 1]) << 1
-        next_code[ln] = code
-    table: dict[tuple[int, int], int] = {}
-    for sym, ln in enumerate(lengths):
-        if ln:
-            table[(ln, next_code[ln])] = sym
-            next_code[ln] += 1
-    return table
-
-
-def _read_sym(br: _InflateBits, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for ln in range(1, 16):
-        code = (code << 1) | br.bit()
-        sym = table.get((ln, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code in deflate stream")
-
-
-_FIXED_LIT = _huffman_from_lengths(
-    [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-)
-_FIXED_DIST = _huffman_from_lengths([5] * 30)
-
-
-def _adler32(data: bytes) -> int:
-    """Hand-rolled RFC 1950 Adler-32 (mod 65521 running pair)."""
-    a, b = 1, 0
-    for byte in data:
-        a = (a + byte) % 65521
-        b = (b + a) % 65521
-    return (b << 16) | a
-
-
-def _inflate_raw(data: bytes, start: int = 0) -> tuple[bytes, int, int]:
-    """RFC 1951 block loop over ``data[start:]``.  Returns
-    (decompressed, block_type_mask, end_offset) where end_offset is
-    the byte index just past the final block (bit stream re-aligned)
-    — the hook that lets the gzip walker find the next member in a
-    concatenated multi-member file."""
-    br = _InflateBits(data)
-    br.pos = start
-    out = bytearray()
-    seen = 0
-    while True:
-        bfinal = br.bit()
-        btype = br.bits(2)
-        seen |= 1 << btype
-        if btype == 0:  # stored
-            br.align()
-            d = br.data
-            if br.pos + 4 > len(d):
-                raise ValueError("stored block header truncated")
-            ln = d[br.pos] | d[br.pos + 1] << 8
-            nln = d[br.pos + 2] | d[br.pos + 3] << 8
-            if ln ^ nln != 0xFFFF:
-                raise ValueError("stored block LEN/NLEN mismatch")
-            br.pos += 4
-            if br.pos + ln > len(d):
-                raise ValueError("stored block body truncated")
-            out += d[br.pos : br.pos + ln]
-            br.pos += ln
-        elif btype in (1, 2):
-            if btype == 1:  # fixed tables
-                lit, dist = _FIXED_LIT, _FIXED_DIST
-            else:  # dynamic: code-length code, then the two alphabets
-                hlit = br.bits(5) + 257
-                hdist = br.bits(5) + 1
-                hclen = br.bits(4) + 4
-                cl_lens = [0] * 19
-                for i in range(hclen):
-                    cl_lens[_CL_ORDER[i]] = br.bits(3)
-                cl = _huffman_from_lengths(cl_lens)
-                lens: list[int] = []
-                while len(lens) < hlit + hdist:
-                    s = _read_sym(br, cl)
-                    if s < 16:
-                        lens.append(s)
-                    elif s == 16:
-                        if not lens:
-                            raise ValueError("repeat with no prior length")
-                        lens += [lens[-1]] * (3 + br.bits(2))
-                    elif s == 17:
-                        lens += [0] * (3 + br.bits(3))
-                    else:
-                        lens += [0] * (11 + br.bits(7))
-                if len(lens) != hlit + hdist:
-                    raise ValueError("code-length run overflows alphabets")
-                lit = _huffman_from_lengths(lens[:hlit])
-                dist = _huffman_from_lengths(lens[hlit:])
-            while True:
-                sym = _read_sym(br, lit)
-                if sym < 256:
-                    out.append(sym)
-                elif sym == 256:
-                    break
-                else:
-                    if sym > 285:
-                        raise ValueError(f"invalid length symbol {sym}")
-                    ln = _LEN_BASE[sym - 257] + br.bits(_LEN_EXTRA[sym - 257])
-                    ds = _read_sym(br, dist)
-                    if ds > 29:
-                        raise ValueError(f"invalid distance symbol {ds}")
-                    d0 = _DIST_BASE[ds] + br.bits(_DIST_EXTRA[ds])
-                    if d0 > len(out):
-                        raise ValueError("LZ77 distance before stream start")
-                    for _ in range(ln):  # overlapping copies are legal
-                        out.append(out[-d0])
-        else:
-            raise ValueError("reserved deflate block type 3")
-        if bfinal:
-            break
-    br.align()
-    return bytes(out), seen, br.pos
-
-
-def inflate(payload: bytes) -> tuple[bytes, int]:
-    """Decompress a zlib (RFC 1950) stream with a from-scratch RFC 1951
-    INFLATE.  Returns (data, block_type_mask) where the mask ORs
-    1 << BTYPE for every block seen (so tests can prove all three
-    block types really executed).  Verifies the zlib header, rejects
-    preset dictionaries, and checks the Adler-32 trailer against a
-    hand-rolled implementation."""
-    import struct
-
-    if len(payload) < 6:
-        raise ValueError("zlib stream too short")
-    cmf, flg = payload[0], payload[1]
-    if cmf & 0x0F != 8:
-        raise ValueError(f"zlib CM {cmf & 0x0F}, expected deflate (8)")
-    if (cmf << 8 | flg) % 31:
-        raise ValueError("zlib header check bits invalid")
-    if flg & 0x20:
-        raise NotImplementedError("preset dictionary (FDICT) unsupported")
-    out, seen, _end = _inflate_raw(payload[2:-4])
-    (want,) = struct.unpack(">I", payload[-4:])
-    got = _adler32(out)
-    if got != want:
-        raise ValueError(f"Adler-32 mismatch: {got:#x} != {want:#x}")
-    return out, seen
+def _digest_rows(
+    batches: Iterator[pd.DataFrame], decompress: Callable[[bytes], bytes]
+) -> Iterator[pd.DataFrame]:
+    """(doc_id, n_bytes, sha256 hex) of every decoded payload."""
+    for pdf in batches:
+        rows = []
+        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
+            data = decompress(p)
+            rows.append((doc_id, len(data), hashlib.sha256(data).hexdigest()))
+        yield pd.DataFrame(rows, columns=["doc_id", "n_bytes", "digest"])
 
 
 def encode_zlib_doc(doc_id: int, text: str) -> bytes:
@@ -5027,31 +4837,12 @@ def encode_zlib_doc(doc_id: int, text: str) -> bytes:
     level-0 (stored blocks only), ==1 Z_FIXED (fixed-Huffman), ==2
     default level 6 (dynamic) — so the corpus exercises every block
     type the spec defines."""
-    import zlib
-
     mode = doc_id % 3
     if mode == 0:
         return zlib.compress(text.encode(), 0)
     strategy = zlib.Z_FIXED if mode == 1 else zlib.Z_DEFAULT_STRATEGY
     co = zlib.compressobj(6, zlib.DEFLATED, 15, 8, strategy)
     return co.compress(text.encode()) + co.flush()
-
-
-def decode_zlib_doc(doc_id: int, payload: bytes) -> tuple[int, str]:
-    """(n_bytes, sha256-hex of the inflated bytes), via the hand-rolled
-    inflate; asserts the block-type contract of the doc's encoding mode
-    (mode 0 must contain ONLY stored blocks; modes 1/2 must contain NO
-    stored block) so a decoder that silently fell back to the zlib
-    library could not fake the mask."""
-    import hashlib
-
-    data, seen = inflate(payload)
-    mode = doc_id % 3
-    if mode == 0 and seen != 1:
-        raise ValueError(f"stored-mode doc decoded block mask {seen}")
-    if mode and seen & 1:
-        raise ValueError(f"huffman-mode doc contains stored blocks ({seen})")
-    return len(data), hashlib.sha256(data).hexdigest()
 
 
 @F.pandas_udf(T.BinaryType())
@@ -5061,16 +4852,8 @@ def _zlib_payload(doc_id: pd.Series, text: pd.Series) -> pd.Series:
     )
 
 
-INFLATE_SCHEMA = "doc_id long, n_bytes long, digest string"
-
-
 def decode_zlibs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [
-            (doc_id, *decode_zlib_doc(doc_id, p))
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"])
-        ]
-        yield pd.DataFrame(rows, columns=["doc_id", "n_bytes", "digest"])
+    return _digest_rows(batches, zlib.decompress)
 
 
 @register(
@@ -5082,22 +4865,18 @@ SELECT doc_id,
 FROM documents
 """,
     description=(
-        "hand-rolled RFC 1951 INFLATE of real zlib streams: all 3 block"
-        " types, LZ77 back-refs, canonical Huffman, Adler-32"
+        "zlib round-trip: real zlib streams in all 3 DEFLATE block types,"
+        " decoded by zlib with its Adler-32 check"
     ),
     tags=("multimodal", "udf", "codec"),
 )
 def q_inflate_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compresses every document with the REAL zlib library (strategy
-    rotated per doc so stored, fixed-Huffman and dynamic-Huffman
-    blocks all appear) and decompresses with a from-scratch RFC
-    1950/1951 inflate: LSB-first bit reader, canonical Huffman
-    reconstruction, the 16/17/18 code-length run codes, LZ77
-    length/distance extra-bit tables with overlapping copies, and a
-    hand-rolled Adler-32 checked against the trailer.  The oracle is
-    simply sha256(text): the decoder must byte-exactly invert genuine
-    deflate output for every document or the driver hash breaks.
-    Same narrow two-Arrow-stage plan as the other codec tiers."""
+    """Compresses every document with zlib, the strategy rotated per
+    doc so stored, fixed-Huffman and dynamic-Huffman blocks all
+    appear, and decodes each stream on executors with zlib, which
+    checks the Adler-32 trailer.  The oracle is sha256(text): the
+    decode must be byte-exact for every document.  Same narrow
+    two-Arrow-stage plan as the other codec tiers."""
     docs = table(spark, sf_dir, "documents")
     payloads = docs.select(
         "doc_id", _zlib_payload("doc_id", "text").alias("payload")
@@ -5105,71 +4884,23 @@ def q_inflate_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(decode_zlibs, schema=INFLATE_SCHEMA)
 
 
-# --------------------------------------------------------------------------
-# WARC.gz (r10): the format web-scale training corpora actually arrive
-# in.  Common Crawl ships WARC files as MULTI-MEMBER gzip — one gzip
-# member per WARC record, concatenated — so a reader can seek to a
-# record boundary and inflate one member without touching the rest.
-# The extractor below walks that exact structure with no decompression
-# library: per-member RFC 1952 header (FLG bit handling for
-# EXTRA/NAME/COMMENT/HCRC), the hand-rolled `_inflate_raw` core (which
-# reports where the member's deflate stream ENDS — the key to finding
-# the next member), a hand-rolled table-driven CRC-32 checked against
-# each member's trailer, then WARC/1.0 header parsing (version line,
-# header fields, Content-Length-delimited payload) on the inflated
-# bytes.  The oracle pins the extracted URI, payload hash and length
-# in closed form over `documents`.
-# --------------------------------------------------------------------------
-
-_CRC_TABLE = []
-for _n in range(256):
-    _c = _n
-    for _ in range(8):
-        _c = (_c >> 1) ^ 0xEDB88320 if _c & 1 else _c >> 1
-    _CRC_TABLE.append(_c)
-
-
-def _crc32(data: bytes) -> int:
-    """Hand-rolled reflected CRC-32 (poly 0xEDB88320), RFC 1952."""
-    c = 0xFFFFFFFF
-    for b in data:
-        c = _CRC_TABLE[(c ^ b) & 0xFF] ^ (c >> 8)
-    return c ^ 0xFFFFFFFF
+# Common Crawl ships WARC files as MULTI-MEMBER gzip: one gzip member
+# per WARC record, concatenated, so a reader can seek to a record
+# boundary and decode one member without touching the rest.
 
 
 def _gzip_members(payload: bytes) -> list[bytes]:
-    """Split a multi-member gzip file into the decompressed bytes of
-    each member: full RFC 1952 header walk (magic, CM=8, FLG bits
-    FEXTRA/FNAME/FCOMMENT/FHCRC each consumed when set), hand-rolled
-    inflate, CRC-32 + ISIZE trailer verification per member."""
-    import struct
-
+    """The decompressed bytes of each member of a multi-member gzip
+    file.  zlib parses each RFC 1952 header and checks each member's
+    CRC-32 and ISIZE trailer.  A member cut off before its end is
+    refused: zlib returns the prefix it could decode without error."""
     members: list[bytes] = []
-    i = 0
-    while i < len(payload):
-        if payload[i : i + 2] != b"\x1f\x8b":
-            raise ValueError(f"bad gzip magic at member offset {i}")
-        if payload[i + 2] != 8:
-            raise ValueError(f"gzip CM {payload[i + 2]}, expected deflate")
-        flg = payload[i + 3]
-        j = i + 10  # fixed header: magic, CM, FLG, MTIME(4), XFL, OS
-        if flg & 0x04:  # FEXTRA
-            (xlen,) = struct.unpack("<H", payload[j : j + 2])
-            j += 2 + xlen
-        if flg & 0x08:  # FNAME: zero-terminated
-            j = payload.index(b"\x00", j) + 1
-        if flg & 0x10:  # FCOMMENT
-            j = payload.index(b"\x00", j) + 1
-        if flg & 0x02:  # FHCRC
-            j += 2
-        data, _seen, end = _inflate_raw(payload, j)
-        crc, isize = struct.unpack("<II", payload[end : end + 8])
-        if _crc32(data) != crc:
-            raise ValueError(f"gzip member at {i}: CRC-32 mismatch")
-        if len(data) % (1 << 32) != isize:
-            raise ValueError(f"gzip member at {i}: ISIZE mismatch")
-        members.append(data)
-        i = end + 8
+    while payload:
+        d = zlib.decompressobj(wbits=31)
+        members.append(d.decompress(payload))
+        if not d.eof:
+            raise ValueError("truncated gzip member")
+        payload = d.unused_data
     return members
 
 
@@ -5233,8 +4964,6 @@ def decode_warc_gz(doc_id: int, payload: bytes) -> tuple[int, str, int, str]:
     """(n_records, target_uri, payload_len, payload_sha) via the full
     multi-member walk; cross-checks the response record's id against
     the doc and requires exactly one warcinfo + one response."""
-    import hashlib
-
     members = _gzip_members(payload)
     records = [_parse_warc_record(m) for m in members]
     types = [h["WARC-Type"] for h, _ in records]
@@ -5279,6 +5008,7 @@ def decode_warcs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+
 @register(
     "warc_gz_extract",
     oracle="""
@@ -5290,22 +5020,21 @@ SELECT doc_id,
 FROM documents
 """,
     description=(
-        "WARC.gz ingest: multi-member gzip walk (hand-rolled inflate +"
-        " CRC-32) + WARC/1.0 record parsing, Common Crawl layout"
+        "WARC.gz ingest: multi-member gzip walk (zlib, CRC-32 + ISIZE per"
+        " member) + WARC/1.0 record parsing, Common Crawl layout"
     ),
     tags=("multimodal", "udf", "codec", "ingest"),
 )
 def q_warc_gz_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trips every document through a real WARC.gz (warcinfo +
     response records, one gzip member each, concatenated — exactly how
-    Common Crawl ships the web).  The extractor is dependency-free end
-    to end: RFC 1952 header walk with all FLG fields, the hand-rolled
-    RFC 1951 inflate reporting member end offsets, table-driven CRC-32
-    + ISIZE trailer checks, then WARC version/header/Content-Length
-    parsing.  The oracle pins the extracted URI, payload length and
-    sha256 in closed form.  Same narrow two-Arrow-stage plan as the
-    codec tiers — the member-per-record layout is precisely what makes
-    100 TB WARC ingest embarrassingly parallel."""
+    Common Crawl ships the web).  The extractor decodes the members one
+    by one with zlib, which checks each member's CRC-32 and ISIZE
+    trailer, then parses the WARC version line, header fields and
+    Content-Length-delimited payload.  The oracle pins the extracted
+    URI, payload length and sha256 in closed form.  Same narrow
+    two-Arrow-stage plan as the codec tiers — the member-per-record
+    layout is what makes WARC ingest embarrassingly parallel."""
     docs = table(spark, sf_dir, "documents")
     payloads = docs.select(
         "doc_id", _warc_payload("doc_id", "text").alias("payload")
@@ -5313,79 +5042,26 @@ def q_warc_gz_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(decode_warcs, schema=WARC_SCHEMA)
 
 
-# --------------------------------------------------------------------------
-# Snappy (r10): the codec under most parquet files in the wild (and
-# this engine's own default page compression) — an LZ77 family with no
-# entropy coder: a varint uncompressed-length preamble, then tagged
-# elements (2-bit tag: literal with 4 length encodings, and copies
-# with 1-, 2- or 4-byte offsets).  The ENCODER is the real snappy
-# library (via pyarrow, the same C++ codec parquet uses), so the
-# hand-rolled decoder must invert genuine production streams byte-
-# exactly; overlapping copies (offset < length, snappy's RLE idiom)
-# are the classic bug this format punishes.
-# --------------------------------------------------------------------------
+# Snappy is the codec under most parquet files (and this engine's own
+# default page compression); LZ4 and zstd are the other two parquet
+# codec families, and zstd is what .jsonl.zst training shards ship in.
 
 
 def snappy_decompress(payload: bytes) -> bytes:
-    """From-scratch raw-snappy-block decoder: varint preamble, the
-    60-63 extended literal lengths, copy-1/2/4 offsets, overlapping
-    copies, and loud failures on zero offsets, out-of-window
-    references and length mismatches."""
-    n = shift = i = 0
-    while True:
-        if i >= len(payload):
-            raise ValueError("snappy preamble truncated")
-        b = payload[i]
-        i += 1
+    """A raw snappy block, decoded by pyarrow's C++ codec.  The varint
+    preamble gives the decoded size that ``pa.decompress`` needs;
+    snappy rejects a stream that does not match it."""
+    n = shift = 0
+    for b in payload:
         n |= (b & 0x7F) << shift
         shift += 7
         if not b & 0x80:
-            break
-    out = bytearray()
-    while i < len(payload):
-        tag = payload[i]
-        i += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            ln = (tag >> 2) + 1
-            if ln > 60:  # 61..64 -> 1..4 extra little-endian length bytes
-                nb = ln - 60
-                ln = int.from_bytes(payload[i : i + nb], "little") + 1
-                i += nb
-            if i + ln > len(payload):
-                raise ValueError("snappy literal overruns input")
-            out += payload[i : i + ln]
-            i += ln
-        else:
-            if kind == 1:  # copy, 3-bit length, 11-bit offset
-                ln = ((tag >> 2) & 7) + 4
-                off = ((tag >> 5) << 8) | payload[i]
-                i += 1
-            elif kind == 2:  # copy, 6-bit length, 2-byte offset
-                ln = (tag >> 2) + 1
-                off = int.from_bytes(payload[i : i + 2], "little")
-                i += 2
-            else:  # copy, 4-byte offset
-                ln = (tag >> 2) + 1
-                off = int.from_bytes(payload[i : i + 4], "little")
-                i += 4
-            if off == 0:
-                raise ValueError("snappy copy with zero offset")
-            if off > len(out):
-                raise ValueError("snappy copy before stream start")
-            for _ in range(ln):  # overlapping copies are the RLE idiom
-                out.append(out[-off])
-    if len(out) != n:
-        raise ValueError(
-            f"snappy decoded {len(out)} bytes, preamble declared {n}"
-        )
-    return bytes(out)
+            return pa.decompress(payload, n, codec="snappy", asbytes=True)
+    raise ValueError("snappy preamble truncated")
 
 
 def encode_snappy_doc(text: str) -> bytes:
     """REAL snappy bytes from the production C++ codec (pyarrow)."""
-    import pyarrow as pa
-
     return pa.compress(text.encode(), codec="snappy", asbytes=True)
 
 
@@ -5395,16 +5071,7 @@ def _snappy_payload(text: pd.Series) -> pd.Series:
 
 
 def decode_snappys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import hashlib
-
-    for pdf in batches:
-        rows = []
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            data = snappy_decompress(p)
-            rows.append(
-                (doc_id, len(data), hashlib.sha256(data).hexdigest())
-            )
-        yield pd.DataFrame(rows, columns=["doc_id", "n_bytes", "digest"])
+    return _digest_rows(batches, snappy_decompress)
 
 
 @register(
@@ -5416,20 +5083,18 @@ SELECT doc_id,
 FROM documents
 """,
     description=(
-        "hand-rolled snappy decode of real pyarrow/C++ streams: varint"
-        " preamble, 4 literal lengths, copy-1/2/4, overlapping copies"
+        "snappy round-trip: real pyarrow/C++ snappy blocks decoded by the"
+        " same codec, sized from the varint preamble"
     ),
     tags=("multimodal", "udf", "codec"),
 )
 def q_snappy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compresses every document with the REAL snappy codec (pyarrow's
     bundled C++ library — the same implementation under parquet page
-    compression) and decompresses with a from-scratch decoder: varint
-    preamble, all four literal-length encodings, the three copy
-    element kinds, and overlapping-copy semantics.  The oracle is
-    sha256(text) byte-exactness, so the decoder must invert genuine
-    production streams for every document.  Same narrow two-Arrow-
-    stage plan as the other codec tiers."""
+    compression) and decodes it on executors with that codec, sized
+    from the block's varint preamble.  The oracle is sha256(text)
+    byte-exactness for every document.  Same narrow two-Arrow-stage
+    plan as the other codec tiers."""
     docs = table(spark, sf_dir, "documents")
     payloads = docs.select(
         "doc_id", _snappy_payload("text").alias("payload")
@@ -5437,191 +5102,26 @@ def q_snappy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(decode_snappys, schema=INFLATE_SCHEMA)
 
 
-# --------------------------------------------------------------------------
-# LZ4 frame (r10): the third parquet codec family (snappy above,
-# DEFLATE under gzip/zlib) — LZ4 is the throughput-king LZ77 variant:
-# token nibbles with 255-continuation length extension, 2-byte match
-# offsets, and a minimum match of 4.  The FRAME format (RFC-less but
-# spec'd at lz4.github.io/lz4/lz4_Frame_format.html knowledge) wraps
-# raw blocks with a FLG/BD descriptor whose HEADER CHECKSUM byte is
-# (xxHash32 >> 8) & 0xFF — so the decoder hand-rolls xxHash32 too and
-# every real pyarrow frame exercises it.  Blocks may be stored
-# uncompressed (high bit of the size word), per-block and content
-# checksums are honored when the encoder sets them.
-# --------------------------------------------------------------------------
-
-_XXH_P1, _XXH_P2, _XXH_P3, _XXH_P4, _XXH_P5 = (
-    2654435761, 2246822519, 3266489917, 668265263, 374761393,
-)
-_M32 = 0xFFFFFFFF
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def xxhash32(data: bytes, seed: int = 0) -> int:
-    """Hand-rolled xxHash32 (the LZ4 frame checksum)."""
-    n = len(data)
-    i = 0
-    if n >= 16:
-        v1 = (seed + _XXH_P1 + _XXH_P2) & _M32
-        v2 = (seed + _XXH_P2) & _M32
-        v3 = seed & _M32
-        v4 = (seed - _XXH_P1) & _M32
-        while i + 16 <= n:
-            for j, v in enumerate((v1, v2, v3, v4)):
-                lane = int.from_bytes(data[i + 4 * j : i + 4 * j + 4], "little")
-                v = (v + lane * _XXH_P2) & _M32
-                v = (_rotl32(v, 13) * _XXH_P1) & _M32
-                if j == 0:
-                    v1 = v
-                elif j == 1:
-                    v2 = v
-                elif j == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            i += 16
-        h = (
-            _rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12) + _rotl32(v4, 18)
-        ) & _M32
-    else:
-        h = (seed + _XXH_P5) & _M32
-    h = (h + n) & _M32
-    while i + 4 <= n:
-        h = (h + int.from_bytes(data[i : i + 4], "little") * _XXH_P3) & _M32
-        h = (_rotl32(h, 17) * _XXH_P4) & _M32
-        i += 4
-    while i < n:
-        h = (h + data[i] * _XXH_P5) & _M32
-        h = (_rotl32(h, 11) * _XXH_P1) & _M32
-        i += 1
-    h ^= h >> 15
-    h = (h * _XXH_P2) & _M32
-    h ^= h >> 13
-    h = (h * _XXH_P3) & _M32
-    h ^= h >> 16
-    return h
-
-
-def _lz4_block(data: bytes, out: bytearray) -> None:
-    """Raw LZ4 block decode appended to ``out``: token nibbles,
-    255-continuation lengths, 2-byte little-endian offsets, minmatch 4,
-    last sequence ends at the literals."""
-    i = 0
-    n = len(data)
-    while i < n:
-        token = data[i]
-        i += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = data[i]
-                i += 1
-                lit += b
-                if b != 255:
-                    break
-        if i + lit > n:
-            raise ValueError("LZ4 literals overrun block")
-        out += data[i : i + lit]
-        i += lit
-        if i >= n:
-            break  # last sequence: literals only
-        off = int.from_bytes(data[i : i + 2], "little")
-        i += 2
-        if off == 0:
-            raise ValueError("LZ4 match offset zero")
-        if off > len(out):
-            raise ValueError("LZ4 match before stream start")
-        ml = (token & 15) + 4
-        if token & 15 == 15:
-            while True:
-                b = data[i]
-                i += 1
-                ml += b
-                if b != 255:
-                    break
-        for _ in range(ml):  # overlapping copies are the RLE idiom
-            out.append(out[-off])
-
-
-def lz4_frame_decompress(payload: bytes) -> bytes:
-    """From-scratch LZ4 FRAME decoder: magic, FLG/BD descriptor with
-    the hand-rolled-xxHash32 header-checksum byte verified, optional
-    content-size field, block stream (high bit = stored), optional
-    per-block and content xxHash32 checksums, 0 end mark."""
-    if payload[:4] != b"\x04\x22\x4d\x18":
-        raise ValueError("bad LZ4 frame magic")
-    flg, bd = payload[4], payload[5]
-    if flg >> 6 != 1:
-        raise ValueError(f"LZ4 frame version {flg >> 6}, expected 1")
-    has_bsum = bool(flg & 0x10)
-    has_csize = bool(flg & 0x08)
-    has_csum = bool(flg & 0x04)
-    if flg & 0x01:
-        raise NotImplementedError("LZ4 dictionary frames unsupported")
-    i = 6
-    desc = payload[4:6]
-    csize = None
-    if has_csize:
-        csize = int.from_bytes(payload[i : i + 8], "little")
-        desc = payload[4:14]
-        i += 8
-    hc = payload[i]
-    i += 1
-    if (xxhash32(desc) >> 8) & 0xFF != hc:
-        raise ValueError("LZ4 frame header checksum mismatch")
-    out = bytearray()
-    while True:
-        word = int.from_bytes(payload[i : i + 4], "little")
-        i += 4
-        if word == 0:
-            break  # EndMark
-        stored = bool(word & 0x80000000)
-        bsz = word & 0x7FFFFFFF
-        block = payload[i : i + bsz]
-        if len(block) != bsz:
-            raise ValueError("LZ4 block truncated")
-        i += bsz
-        if has_bsum:
-            (bx,) = (int.from_bytes(payload[i : i + 4], "little"),)
-            i += 4
-            if xxhash32(block) != bx:
-                raise ValueError("LZ4 block checksum mismatch")
-        if stored:
-            out += block
-        else:
-            _lz4_block(block, out)
-    if has_csum:
-        cx = int.from_bytes(payload[i : i + 4], "little")
-        if xxhash32(bytes(out)) != cx:
-            raise ValueError("LZ4 content checksum mismatch")
-    if csize is not None and len(out) != csize:
-        raise ValueError(
-            f"LZ4 content size {len(out)} != declared {csize}"
-        )
-    return bytes(out)
+def frame_decompress(payload: bytes, codec: str) -> bytes:
+    """Every frame of a zstd or LZ4 frame payload, decoded by pyarrow's
+    stream reader for ``codec``.  ``pa.decompress`` would need the
+    decoded size up front, and pyarrow's LZ4 frames do not carry it.
+    An empty payload holds no frame; the reader would return no bytes
+    for it, so it is refused."""
+    if not payload:
+        raise ValueError(f"empty {codec} payload")
+    return pa.input_stream(pa.py_buffer(payload), compression=codec).read()
 
 
 @F.pandas_udf(T.BinaryType())
 def _lz4_payload(text: pd.Series) -> pd.Series:
-    import pyarrow as pa
-
     return pd.Series(
         [pa.compress(t.encode(), codec="lz4", asbytes=True) for t in text]
     )
 
 
 def decode_lz4s(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import hashlib
-
-    for pdf in batches:
-        rows = []
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            data = lz4_frame_decompress(p)
-            rows.append((doc_id, len(data), hashlib.sha256(data).hexdigest()))
-        yield pd.DataFrame(rows, columns=["doc_id", "n_bytes", "digest"])
+    return _digest_rows(batches, partial(frame_decompress, codec="lz4"))
 
 
 @register(
@@ -5633,21 +5133,18 @@ SELECT doc_id,
 FROM documents
 """,
     description=(
-        "hand-rolled LZ4 frame decode of real pyarrow streams: token"
-        " nibbles, 255-continuations, xxHash32 header checksum"
+        "LZ4 frame round-trip: real pyarrow LZ4 frames decoded by pyarrow's"
+        " LZ4 frame reader (header checksum verified)"
     ),
     tags=("multimodal", "udf", "codec"),
 )
 def q_lz4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compresses every document with the REAL LZ4 frame codec
-    (pyarrow's bundled C library) and decompresses from scratch:
-    frame descriptor walk with the xxHash32 header-checksum byte
-    verified by a hand-rolled xxHash32, stored-vs-compressed block
-    dispatch, and the raw-block token grammar (nibble lengths,
-    255-continuations, 2-byte offsets, minmatch 4, overlapping
-    copies).  Completes the parquet codec trio with snappy and
-    DEFLATE.  Oracle: sha256(text) byte-exactness; same narrow
-    two-Arrow-stage plan as the codec tiers."""
+    (pyarrow's bundled C library) and decodes it on executors with
+    pyarrow's LZ4 frame stream reader, which verifies the frame
+    descriptor's header checksum.  Oracle: sha256(text)
+    byte-exactness; same narrow two-Arrow-stage plan as the codec
+    tiers."""
     docs = table(spark, sf_dir, "documents")
     payloads = docs.select(
         "doc_id", _lz4_payload("text").alias("payload")
@@ -5655,27 +5152,14 @@ def q_lz4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(decode_lz4s, schema=INFLATE_SCHEMA)
 
 
-# --------------------------------------------------------------------------
-# zstandard (r10): see functions/zstd.py — the from-scratch RFC 8878
-# decoder (FSE, Huffman literals incl. 4-stream + FSE-compressed
-# weights, predefined/RLE/FSE/repeat sequence tables, repcode history,
-# hand-rolled xxHash64).  zstd is the codec LLM training corpora ship
-# in (.jsonl.zst), so the ingest engine owns its critical path.
-# --------------------------------------------------------------------------
-
-from ..functions.zstd import zstd_decompress  # noqa: E402
-
-
 @F.pandas_udf(T.BinaryType())
 def _zstd_payload(doc_id: pd.Series, text: pd.Series) -> pd.Series:
-    from pyarrow import Codec
-
     # level rotation: 1 favors fixed/fast paths, 19 maximizes FSE-
     # described tables and multi-stream Huffman — breadth per corpus
     levels = {0: 1, 1: 3, 2: 19}
     return pd.Series(
         [
-            Codec("zstd", compression_level=levels[int(d) % 3]).compress(
+            pa.Codec("zstd", compression_level=levels[int(d) % 3]).compress(
                 t.encode(), asbytes=True
             )
             for d, t in zip(doc_id, text)
@@ -5684,14 +5168,7 @@ def _zstd_payload(doc_id: pd.Series, text: pd.Series) -> pd.Series:
 
 
 def decode_zstds(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import hashlib
-
-    for pdf in batches:
-        rows = []
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            data = zstd_decompress(p)
-            rows.append((doc_id, len(data), hashlib.sha256(data).hexdigest()))
-        yield pd.DataFrame(rows, columns=["doc_id", "n_bytes", "digest"])
+    return _digest_rows(batches, partial(frame_decompress, codec="zstd"))
 
 
 @register(
@@ -5703,23 +5180,18 @@ SELECT doc_id,
 FROM documents
 """,
     description=(
-        "from-scratch RFC 8878 zstd decode of real libzstd streams:"
-        " FSE + Huffman literals + sequences/repcodes + xxHash64"
+        "zstd round-trip: real libzstd frames at levels 1/3/19 decoded by"
+        " pyarrow's zstd stream reader"
     ),
     tags=("multimodal", "udf", "codec"),
 )
 def q_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compresses every document with REAL libzstd (pyarrow's bundled
-    C library, level rotated 1/3/19 per doc) and decodes with the
-    from-scratch RFC 8878 implementation in functions/zstd.py: frame
-    header, FSE probability headers with the small-value cutoff,
-    table spread + state machines, Huffman literals (direct and
-    FSE-compressed weights, 1- and 4-stream), the four sequence-table
-    modes, repeated-offset history with the ll==0 shift, and backward
-    bitstreams throughout.  zstd is what .jsonl.zst training corpora
-    arrive in; the oracle (sha256 of the text) requires byte-exact
-    inversion of production streams for every document.  Same narrow
-    two-Arrow-stage plan as the codec tiers."""
+    C library, level rotated 1/3/19 per doc) and decodes it on
+    executors with pyarrow's zstd stream reader.  zstd is what
+    .jsonl.zst training corpora arrive in; the oracle (sha256 of the
+    text) requires byte-exact decoding of every document.  Same
+    narrow two-Arrow-stage plan as the codec tiers."""
     docs = table(spark, sf_dir, "documents")
     payloads = docs.select(
         "doc_id", _zstd_payload("doc_id", "text").alias("payload")
@@ -5835,7 +5307,7 @@ def q_video_frame_sample_decode(
 
 
 # --------------------------------------------------------------------------
-# TIFF (r10): the scientific/scan format — and the OTHER LZW dialect.
+# TIFF: the scientific/scan format — and the OTHER LZW dialect.
 # TIFF-LZW differs from GIF-LZW in exactly the ways that corrupt a
 # decoder that assumes one spec: codes pack MSB-FIRST (GIF: LSB), the
 # alphabet is the full byte range (clear=256/eoi=257, initial width

@@ -58,80 +58,9 @@ def register(
 _LOADED = False
 
 
-def _correctness_files() -> list[tuple[int, str]]:
-    """Committed ``CORRECTNESS_r{N}.json`` files at the repo root,
-    as (round_number, path) pairs."""
-    import glob
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out: list[tuple[int, str]] = []
-    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if m:
-            out.append((int(m.group(1)), p))
-    return sorted(out)
-
-
-def _prior_driver_rows() -> tuple[frozenset[str], int]:
-    """(names with a prior *successful* driver row, next round number).
-
-    Derived from the committed ``CORRECTNESS_r{N}.json`` files — not a
-    hand-maintained list, so it can't rot as rounds accumulate.  A row
-    counts as coverage when it's fully green (rows+schema+hash) or a
-    rows-only ``no_oracle`` check that produced a row count; a FAILED
-    row keeps the query in the fresh tier so the driver rechecks it.
-    """
-    import json
-
-    covered: set[str] = set()
-    last_round = 0
-    for n, path in _correctness_files():
-        last_round = max(last_round, n)
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            green = bool(
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            rows_only = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if green or rows_only:
-                covered.add(name)
-    return frozenset(covered), last_round + 1
-
-
 def load_all() -> dict[str, Query]:
-    """Import every operator module so its @register calls run.
-
-    Returns the registry ordered for the external driver, which
-    verifies a bounded number of queries per round (observed budget:
-    50) iterating ``queries()`` in order.  Tiers:
-
-      0. no prior driver row, oracle-backed      (registration order)
-      1. no prior driver row, no oracle          (registration order;
-         today that's only ``bpe_vocab`` plus any not-yet-sampled
-         approx/streaming query — each earns a rows-only row)
-      2. already driver-verified — ordered by a per-round deterministic
-         shuffle, so the budget left after the fresh tiers re-verifies
-         a DIFFERENT rotating sample of old queries each round instead
-         of permanently shadowing them (a regression in a verified
-         query is caught again within a few rounds, not never).
-
-    Coverage is derived from the committed CORRECTNESS_r*.json files
-    (see ``_prior_driver_rows``); local tests remain the per-commit
-    regression net for everything the current round's budget misses.
-    """
+    """Import every operator module so its @register calls run, and
+    return the registry in registration order."""
     global _LOADED
     if not _LOADED:
         from .operators import (  # noqa: F401
@@ -155,15 +84,4 @@ def load_all() -> dict[str, Query]:
 
         _LOADED = True
 
-    import zlib
-
-    covered, round_no = _prior_driver_rows()
-
-    def rank(item: tuple[str, Query]) -> tuple[int, int]:
-        name, q = item
-        if name not in covered:
-            # sort is stable: registration order holds within the tier
-            return (0 if q.oracle else 1, 0)
-        return (2, zlib.crc32(f"{name}|r{round_no}".encode()))
-
-    return dict(sorted(QUERIES.items(), key=rank))
+    return dict(QUERIES)

@@ -18,12 +18,11 @@ range, so each record is read exactly once and a member straddling
 ``end`` still belongs to the range that contains its start.  A corrupt
 member fails the read in either kind of split.
 
-Member decode in the source rides zlib (guide §4.2: hand bulk bytes to
-native code — the scan is the operator here, and pure-Python inflate
-made every split CPU-bound on decompression).  The dependency-free
-hand-rolled gzip/WARC stack in operators/multimodal.py remains the
-codec-tier workload (inflate_roundtrip and friends) and the WARC/1.0
-record parser here is still that module's.
+Member decode rides zlib: bulk bytes go to native code, since the
+scan is the operator here.  Reading one member at a time from a file
+(resync, byte-range ownership) is this module's own; the WARC/1.0
+record parser is the one ``warc_gz_extract`` uses in
+operators/multimodal.py.
 
 The fixture builder (`build_warc_shards`) writes deterministic shards
 from the documents parquet — driver-side scaffolding for tests and

@@ -23,8 +23,8 @@ import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
 
 from inverted_index_using_the_map_reduce_paradigm_spark.data import TABLES  # noqa: E402
-from inverted_index_using_the_map_reduce_paradigm_spark.registry import load_all  # noqa: E402
 from inverted_index_using_the_map_reduce_paradigm_spark.session import get_spark  # noqa: E402
+from __spark_entry__ import driver_order  # noqa: E402
 
 
 def value_hash(df: pd.DataFrame) -> str:
@@ -51,7 +51,7 @@ def main() -> None:
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = list(load_all().items())[:n]
+    qs = list(driver_order().items())[:n]
     bad = []
     for name, q in qs:
         t0 = time.perf_counter()

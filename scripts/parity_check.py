@@ -26,11 +26,9 @@ from inverted_index_using_the_map_reduce_paradigm_spark.parity import (
     duck_con,
     normalize,
 )
-from inverted_index_using_the_map_reduce_paradigm_spark.registry import (
-    _prior_driver_rows,
-    load_all,
-)
+from inverted_index_using_the_map_reduce_paradigm_spark.registry import load_all
 from inverted_index_using_the_map_reduce_paradigm_spark.session import get_spark
+from __spark_entry__ import _prior_driver_rows
 
 
 def main() -> int:

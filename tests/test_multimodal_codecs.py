@@ -1290,40 +1290,41 @@ def test_bmp_flip_and_padding_are_load_bearing():
 
 
 # --------------------------------------------------------------------------
-# r10: hand-rolled RFC 1950/1951 inflate
+# zlib (DEFLATE) decode of inflate_roundtrip
 # --------------------------------------------------------------------------
 
+import gzip as _gzip  # noqa: E402
+import hashlib as _hashlib  # noqa: E402
 import zlib as _zlib  # noqa: E402
 
+import pandas as _pd  # noqa: E402
+import pyarrow as _pa  # noqa: E402
+
 from inverted_index_using_the_map_reduce_paradigm_spark.operators.multimodal import (  # noqa: E402
-    _adler32,
-    decode_zlib_doc,
+    decode_zlibs,
     encode_zlib_doc,
-    inflate,
 )
 
 
-def test_adler32_matches_published_anchor():
-    assert _adler32(b"Wikipedia") == 0x11E60398
-    assert _adler32(b"") == 1
+def _digests(decode, payloads: list[bytes]) -> list[tuple[int, str]]:
+    """(n_bytes, digest) rows of a codec query's mapInPandas decode."""
+    pdf = _pd.DataFrame({"doc_id": range(len(payloads)), "payload": payloads})
+    out = _pd.concat(list(decode(iter([pdf]))))
+    return list(zip(out["n_bytes"], out["digest"]))
+
+
+def _want(data: bytes) -> list[tuple[int, str]]:
+    return [(len(data), _hashlib.sha256(data).hexdigest())]
 
 
 @pytest.mark.parametrize("mode", [0, 1, 2])
 def test_inflate_inverts_every_zlib_strategy(mode):
-    """level-0 (stored), Z_FIXED (fixed Huffman) and default (dynamic
-    Huffman) streams from the real zlib library must all invert, and
-    the block-type mask must prove the intended type actually ran."""
-    data = (b"the quick brown fox jumps over the lazy dog " * 300)[:9001]
-    if mode == 0:
-        z = _zlib.compress(data, 0)
-    else:
-        st = _zlib.Z_FIXED if mode == 1 else _zlib.Z_DEFAULT_STRATEGY
-        co = _zlib.compressobj(6, _zlib.DEFLATED, 15, 8, st)
-        z = co.compress(data) + co.flush()
-    out, seen = inflate(z)
-    assert out == data
-    want_bit = {0: 1, 1: 2, 2: 4}[mode]
-    assert seen & want_bit and not (mode and seen & 1)
+    """The query's encoder emits stored (doc_id % 3 == 0),
+    fixed-Huffman (1) and dynamic-Huffman (2) streams; each decodes
+    byte-exactly."""
+    text = ("the quick brown fox jumps over the lazy dog " * 300)[:9001]
+    payload = encode_zlib_doc(mode, text)
+    assert _digests(decode_zlibs, [payload]) == _want(text.encode())
 
 
 @given(st.binary(min_size=0, max_size=40000))
@@ -1332,30 +1333,25 @@ def test_inflate_roundtrips_arbitrary_bytes(data):
     """Random binary through default zlib: the dynamic-Huffman and
     LZ77 paths (incl. overlapping copies on repetitive inputs) must
     byte-exactly invert."""
-    out, _ = inflate(_zlib.compress(data, 6))
-    assert out == data
+    assert _digests(decode_zlibs, [_zlib.compress(data, 6)]) == _want(data)
 
 
 def test_inflate_loud_failures():
     z = _zlib.compress(b"hello world, hello world, hello")
-    with pytest.raises(ValueError, match="Adler-32"):
-        inflate(z[:-1] + bytes([z[-1] ^ 1]))
-    with pytest.raises(ValueError):
-        inflate(z[: len(z) // 2])  # truncated mid-stream
-    with pytest.raises(ValueError):
-        inflate(b"\x00" + z[1:])  # CM nibble corrupted
-    # decode_zlib_doc's block-type contract: a stored-mode doc_id fed a
-    # huffman stream is rejected (no silent library fallback possible)
-    with pytest.raises(ValueError, match="mask"):
-        decode_zlib_doc(3, encode_zlib_doc(1, "x " * 50))  # 3%3==0 wants stored
+    for bad, why in [
+        (z[:-1] + bytes([z[-1] ^ 1]), "incorrect data check"),  # Adler-32
+        (z[: len(z) // 2], "truncated"),  # cut mid-stream
+        (b"\x00" + z[1:], "incorrect header check"),  # CM nibble
+    ]:
+        with pytest.raises(_zlib.error, match=why):
+            _digests(decode_zlibs, [bad])
 
 
 # --------------------------------------------------------------------------
-# r10: WARC.gz multi-member extraction
+# WARC.gz multi-member extraction
 # --------------------------------------------------------------------------
 
 from inverted_index_using_the_map_reduce_paradigm_spark.operators.multimodal import (  # noqa: E402
-    _crc32,
     _gzip_members,
     _parse_warc_record,
     decode_warc_gz,
@@ -1363,42 +1359,49 @@ from inverted_index_using_the_map_reduce_paradigm_spark.operators.multimodal imp
 )
 
 
-def test_crc32_matches_canonical_check_value():
-    assert _crc32(b"123456789") == 0xCBF43926
-    assert _crc32(b"") == 0
-
-
 def test_gzip_member_walk_handles_flags_and_concatenation():
-    """Concatenated members split exactly; FNAME/FCOMMENT headers are
-    consumed; a flipped payload bit is a loud CRC error."""
-    import gzip
+    """Concatenated members split exactly; FNAME headers are consumed;
+    a flipped trailer bit is a loud CRC error, and bytes after the last
+    member that start no member fail loud too."""
     import io
 
-    a = gzip.compress(b"first", 6, mtime=0)
+    a = _gzip.compress(b"first", 6, mtime=0)
     buf = io.BytesIO()
-    with gzip.GzipFile(filename="x.txt", fileobj=buf, mode="wb") as g:
+    with _gzip.GzipFile(filename="x.txt", fileobj=buf, mode="wb") as g:
         g.write(b"second named")
-    combined = a + buf.getvalue() + gzip.compress(b"third" * 100, 0, mtime=0)
+    combined = a + buf.getvalue() + _gzip.compress(b"third" * 100, 0, mtime=0)
     assert _gzip_members(combined) == [
         b"first", b"second named", b"third" * 100,
     ]
     bad = bytearray(a)
-    bad[-6] ^= 0x40  # inside the deflate body / crc region
-    with pytest.raises(ValueError):
+    bad[-6] ^= 0x40  # inside the CRC-32 trailer
+    with pytest.raises(_zlib.error, match="incorrect data check"):
         _gzip_members(bytes(bad))
+    with pytest.raises(_zlib.error, match="incorrect header check"):
+        _gzip_members(a + b"trailing junk")
+
+
+@pytest.mark.parametrize("cut", [1, 8, 9, 20, 37])
+def test_gzip_truncated_final_member_is_loud(cut):
+    """A final member cut off in its trailer, its deflate body or its
+    header: zlib returns the prefix it decoded without an error, so
+    only the end-of-stream check catches it."""
+    a = _gzip.compress(b"first", 6, mtime=0)
+    b = _gzip.compress(b"second member " * 50, 6, mtime=0)
+    assert len(b) == 41  # 10-byte header, 23-byte body, 8-byte trailer
+    with pytest.raises(ValueError, match="truncated gzip member"):
+        _gzip_members(a + b[:-cut])
 
 
 @pytest.mark.parametrize(
     ("doc_id", "text"), [(0, "hello"), (7, "a b " * 500), (123, "")]
 )
 def test_warc_roundtrip(doc_id, text):
-    import hashlib
-
     assert decode_warc_gz(doc_id, encode_warc_gz(doc_id, text)) == (
         2,
         f"http://corpus.example/doc/{doc_id}",
         len(text.encode()),
-        hashlib.sha256(text.encode()).hexdigest(),
+        _hashlib.sha256(text.encode()).hexdigest(),
     )
 
 
@@ -1416,7 +1419,7 @@ def test_warc_record_structure_is_enforced():
 
 
 # --------------------------------------------------------------------------
-# r10: snappy
+# snappy
 # --------------------------------------------------------------------------
 
 from inverted_index_using_the_map_reduce_paradigm_spark.operators.multimodal import (  # noqa: E402
@@ -1427,70 +1430,57 @@ from inverted_index_using_the_map_reduce_paradigm_spark.operators.multimodal imp
 @given(st.binary(min_size=0, max_size=60000))
 @settings(max_examples=30, deadline=None)
 def test_snappy_inverts_real_pyarrow_streams(data):
-    import pyarrow as pa
-
-    z = pa.compress(data, codec="snappy", asbytes=True)
+    z = _pa.compress(data, codec="snappy", asbytes=True)
     assert snappy_decompress(z) == data
 
 
 def test_snappy_overlapping_copy_and_loud_failures():
-    import pyarrow as pa
-
     # pure RLE input: the codec emits overlapping copies (offset <
     # length) — the idiom a memcpy-based decoder corrupts
     data = b"z" * 5000
     assert snappy_decompress(
-        pa.compress(data, codec="snappy", asbytes=True)
+        _pa.compress(data, codec="snappy", asbytes=True)
     ) == data
-    z = bytearray(pa.compress(b"hello hello hello hello", codec="snappy", asbytes=True))
-    with pytest.raises(ValueError):
-        snappy_decompress(bytes(z[:-2]))  # truncated literal/copy
+    z = _pa.compress(b"hello hello hello hello", codec="snappy", asbytes=True)
+    with pytest.raises(OSError, match="Corrupt snappy"):
+        snappy_decompress(z[:-2])  # truncated literal/copy
     # declared length vs decoded length mismatch
-    z2 = bytearray(pa.compress(b"abcd", codec="snappy", asbytes=True))
+    z2 = bytearray(_pa.compress(b"abcd", codec="snappy", asbytes=True))
     z2[0] += 1  # bump the varint preamble
-    with pytest.raises(ValueError):
+    with pytest.raises(OSError, match="Corrupt snappy"):
         snappy_decompress(bytes(z2))
+    with pytest.raises(ValueError, match="preamble truncated"):
+        snappy_decompress(b"\x80\x80")
 
 
 # --------------------------------------------------------------------------
-# r10: LZ4 frame + xxHash32
+# LZ4 frame
 # --------------------------------------------------------------------------
 
 from inverted_index_using_the_map_reduce_paradigm_spark.operators.multimodal import (  # noqa: E402
-    lz4_frame_decompress,
-    xxhash32,
+    frame_decompress,
 )
-
-
-def test_xxhash32_published_vectors():
-    """The xxHash reference test vectors (seed 0 and a nonzero seed)."""
-    assert xxhash32(b"") == 0x02CC5D05
-    assert xxhash32(b"", seed=0x9E3779B1) == 0x36B78AE7
-    # >=16-byte path exercises the 4-lane stripe loop
-    assert xxhash32(b"xxhash32 is a fast non-cryptographic hash") != 0
 
 
 @given(st.binary(min_size=0, max_size=60000))
 @settings(max_examples=30, deadline=None)
 def test_lz4_inverts_real_pyarrow_frames(data):
-    import pyarrow as pa
-
-    z = pa.compress(data, codec="lz4", asbytes=True)
-    assert lz4_frame_decompress(z) == data
+    z = _pa.compress(data, codec="lz4", asbytes=True)
+    assert frame_decompress(z, "lz4") == data
 
 
 def test_lz4_frame_failures_are_loud():
-    import pyarrow as pa
-
-    z = bytearray(pa.compress(b"hello hello hello hello hello", codec="lz4", asbytes=True))
-    with pytest.raises(ValueError, match="magic"):
-        lz4_frame_decompress(b"\x00" + bytes(z[1:]))
+    z = _pa.compress(b"hello " * 5, codec="lz4", asbytes=True)
+    with pytest.raises(OSError, match="frameType_unknown"):
+        frame_decompress(b"\x00" + z[1:], "lz4")  # bad magic
     bad = bytearray(z)
     bad[4] ^= 0x08  # flip a FLG bit: header checksum must catch it
-    with pytest.raises(ValueError, match="header checksum"):
-        lz4_frame_decompress(bytes(bad))
-    with pytest.raises((ValueError, IndexError)):
-        lz4_frame_decompress(bytes(z[: len(z) - 5]))  # truncated
+    with pytest.raises(OSError, match="headerChecksum_invalid"):
+        frame_decompress(bytes(bad), "lz4")
+    with pytest.raises(OSError, match="Truncated"):
+        frame_decompress(z[: len(z) - 5], "lz4")
+    with pytest.raises(ValueError, match="empty lz4 payload"):
+        frame_decompress(b"", "lz4")
 
 
 def test_avi_sampled_decode_touches_only_sampled_frames():

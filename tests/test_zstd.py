@@ -1,8 +1,8 @@
-"""Unit tests for the from-scratch zstd (RFC 8878) decoder in
-functions/zstd.py: reference xxHash64 vectors, roundtrips of real
-libzstd output across levels and data shapes (hypothesis-driven),
-the content-checksum path on a hand-flagged frame, and loud failures
-on corruption."""
+"""Unit tests for the zstd decode behind ``zstd_roundtrip``
+(``frame_decompress(payload, "zstd")``, pyarrow's zstd stream reader):
+roundtrips of real libzstd output across levels and data shapes
+(hypothesis-driven), concatenated and skippable frames, and loud
+failures on corruption."""
 
 from __future__ import annotations
 
@@ -13,10 +13,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyarrow import Codec
 
-from inverted_index_using_the_map_reduce_paradigm_spark.functions.zstd import (
-    ZstdError,
-    xxhash64,
-    zstd_decompress,
+from inverted_index_using_the_map_reduce_paradigm_spark.operators.multimodal import (
+    frame_decompress,
 )
 
 
@@ -24,11 +22,8 @@ def _z(data: bytes, level: int = 3) -> bytes:
     return Codec("zstd", compression_level=level).compress(data, asbytes=True)
 
 
-def test_xxhash64_reference_vectors():
-    assert xxhash64(b"") == 0xEF46DB3751D8E999
-    assert xxhash64(b"", seed=1) == 0xD5AFBA1336A3BE4B
-    assert xxhash64(b"a") == 0xD24EC4F1A98C6E5B
-    assert xxhash64(b"abc") == 0x44BC2CF5AD770999
+def _unz(payload: bytes) -> bytes:
+    return frame_decompress(payload, "zstd")
 
 
 @pytest.mark.parametrize("level", [1, 3, 9, 19])
@@ -51,73 +46,52 @@ def test_zstd_roundtrips_real_libzstd(level, shape):
         data = b"x"
     else:
         data = b""
-    assert zstd_decompress(_z(data, level)) == data
+    assert _unz(_z(data, level)) == data
 
 
 def test_zstd_multiblock_exercises_treeless_and_repeat_modes():
     """> 128 KiB of compressible text spans multiple compressed blocks
     in one frame — later blocks may reuse the Huffman table (treeless
-    literals) and FSE tables (repeat mode), the cross-block state this
-    decoder must carry."""
+    literals) and FSE tables (repeat mode)."""
     rng = random.Random(99)
     vocab = [f"token{k}" for k in range(100)]
     data = " ".join(rng.choice(vocab) for _ in range(120000)).encode()
     assert len(data) > 400_000
     for level in (1, 19):
-        assert zstd_decompress(_z(data, level)) == data
+        assert _unz(_z(data, level)) == data
 
 
 @given(st.binary(min_size=0, max_size=30000))
 @settings(max_examples=25, deadline=None)
 def test_zstd_roundtrips_arbitrary_bytes(data):
-    assert zstd_decompress(_z(data)) == data
-
-
-def test_zstd_content_checksum_path():
-    """pyarrow frames carry no checksum; hand-flag one (set FHD bit 2,
-    append low-32 xxHash64 of the content) — the decoder must verify
-    it, and must reject a flipped checksum."""
-    data = b"checksummed content " * 50
-    z = bytearray(_z(data))
-    assert not z[4] & 0x04
-    z[4] |= 0x04
-    csum = (xxhash64(data) & 0xFFFFFFFF).to_bytes(4, "little")
-    good = bytes(z) + csum
-    assert zstd_decompress(good) == data
-    bad = bytes(z) + bytes([csum[0] ^ 1]) + csum[1:]
-    with pytest.raises(ZstdError, match="checksum"):
-        zstd_decompress(bad)
+    assert _unz(_z(data)) == data
 
 
 def test_zstd_loud_failures():
     data = b"hello zstd world " * 100
     z = _z(data)
-    with pytest.raises(ZstdError, match="magic"):
-        zstd_decompress(b"\x00" + z[1:])
+    with pytest.raises(OSError, match="Unknown frame descriptor"):
+        _unz(b"\x00" + z[1:])  # bad magic
     # declared frame content size must match the decode
-    with pytest.raises(ZstdError):
-        bad = bytearray(z)
-        # FCS field: single-segment + fcs_flag=1 -> bytes 5..6
-        bad[5] ^= 0xFF
-        zstd_decompress(bytes(bad))
-    with pytest.raises((ZstdError, IndexError)):
-        zstd_decompress(z[: len(z) // 2])
+    bad = bytearray(z)
+    # FCS field: single-segment + fcs_flag=1 -> bytes 5..6
+    bad[5] ^= 0xFF
+    with pytest.raises(OSError, match="corruption"):
+        _unz(bytes(bad))
+    with pytest.raises(OSError, match="Truncated"):
+        _unz(z[: len(z) // 2])
+    with pytest.raises(ValueError, match="empty zstd payload"):
+        _unz(b"")
 
 
 def test_zstd_multi_frame_and_skippable():
     """.zst files are legally CONCATENATIONS of frames, optionally with
-    skippable frames (seek tables, padding) between them; the multi
-    decoder must splice data frames and skip the 0x184D2A5x ones, and
-    the single-frame decoder must refuse trailing bytes loudly."""
-    from inverted_index_using_the_map_reduce_paradigm_spark.functions.zstd import (
-        zstd_decompress_multi,
-    )
-
+    skippable frames (seek tables, padding) between them: the decode
+    splices the data frames and skips the 0x184D2A5x ones, and bytes
+    after the last frame that start no frame fail loud."""
     a, b, c = b"first " * 40, b"", b"third frame content " * 25
     skip = (0x184D2A53).to_bytes(4, "little") + (9).to_bytes(4, "little") + b"seektable"
     blob = _z(a) + skip + _z(b) + _z(c, level=19)
-    assert zstd_decompress_multi(blob) == a + b + c
-    with pytest.raises(ZstdError, match="trailing"):
-        zstd_decompress(_z(a) + _z(c))
-    with pytest.raises(ZstdError):
-        zstd_decompress_multi(b"")
+    assert _unz(blob) == a + b + c
+    with pytest.raises(OSError):
+        _unz(_z(a) + b"trailing junk")
